@@ -254,6 +254,8 @@ def scc_coloring(
                     for s in frag_slots[:-1]:
                         runner.release(s)
                     frag_slots = frag_slots[-1:]
+            else:
+                runner.release(f"vis_{hops}")
 
         runner.log("class_bfs_done", hops=hops)
         # retired = visited; scc label = min member id per color class
@@ -265,4 +267,7 @@ def scc_coloring(
         for s in ("color", "ce", "vis_base", "prop_re", *frag_slots):
             runner.release(s)
 
+    # the result reads only the done fragments
+    runner.release("active")
+    runner.release("re")
     return all_done().select(F.col("id").cast("long"), F.col("scc_id").cast("long"))

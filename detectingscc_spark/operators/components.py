@@ -43,7 +43,7 @@ def connected_components(
 
     from pyspark.sql import Observation
 
-    from .scc import BROADCAST_ROW_LIMIT, _part_target
+    from .scc import BROADCAST_ROW_LIMIT
 
     lab = verts.select("id", F.col("id").alias("label"))
     lab, n_verts = runner.tick("label", lab)

@@ -64,13 +64,6 @@ def test_scc_no_trim2(spark):
     assert got == expect
 
 
-@pytest.mark.parametrize("name", ["sample5.gr", "sample128.gr"])
-def test_scc_csr_expansion(spark, name):
-    """The Arrow CSR multi-hop kernel must agree with the join expander."""
-    got, expect, _ = _run_scc(spark, name, expand="csr")
-    assert got == expect
-
-
 def test_scc_corpus_ingest_end_to_end(spark):
     """corpus -> pandas-UDF extraction -> SCC, vs oracle on rule edges."""
     from detectingscc_spark.corpus import generate_corpus
@@ -86,46 +79,35 @@ def test_scc_corpus_ingest_end_to_end(spark):
     assert got == _k(erows, list(range(n)))
 
 
-def test_scc_hub_skew_salted_path(spark, monkeypatch):
-    """Hub-skewed graph (one vertex touches ~50% of edges) driven through
-    the SALTED hub-split join: BROADCAST_ROW_LIMIT is forced to 0 so
-    every hop takes the shuffle path, and hub_degree_threshold=100 makes
-    the hub's adjacency split out and salted across SALT_PARTS
-    partitions. Output must stay exact."""
-    from detectingscc_spark.operators import scc as scc_mod
-    from .oracles import kosaraju_scc as _k
-
-    monkeypatch.setattr(scc_mod, "BROADCAST_ROW_LIMIT", 0)
-    n = 600
-    hub = 0
-    edges = []
-    # ring 0..n-1 (one giant SCC) + hub spokes to/from every 2nd vertex
-    for i in range(n):
-        edges.append((i, (i + 1) % n))
-    for i in range(2, n, 2):
-        edges.append((hub, i))
-        edges.append((i, hub))
-    df = spark.createDataFrame(edges, "src long, dst long")
-    res = strongly_connected_components(spark, df, hub_degree_threshold=100)
-    got = {r["id"]: r["scc_id"] for r in res.collect()}
-    assert got == _k(edges, list(range(n)))
-    assert len(set(got.values())) == 1  # ring makes it one SCC
-
-
-def test_scc_big_frontier_plain_shuffle_path(spark, monkeypatch):
-    """No hubs above threshold + frontier past the broadcast limit ->
-    the plain shuffle-join branch. Output must stay exact."""
-    from detectingscc_spark.operators import scc as scc_mod
-    from .oracles import kosaraju_scc as _k
-
-    monkeypatch.setattr(scc_mod, "BROADCAST_ROW_LIMIT", 0)
-    n = 400
+def _ring_chords(n=400):
     edges = [(i, (i + 1) % n) for i in range(n)]
-    edges += [(i, (i + 7) % n) for i in range(0, n, 3)]
+    return edges + [(i, (i + 7) % n) for i in range(0, n, 3)], n
+
+
+def _ring_hub_spokes(n=600):
+    # ring 0..n-1 (one giant SCC) + hub 0 spokes to/from every 2nd vertex:
+    # the hub touches ~50% of the edges
+    edges = [(i, (i + 1) % n) for i in range(n)]
+    for i in range(2, n, 2):
+        edges += [(0, i), (i, 0)]
+    return edges, n
+
+
+@pytest.mark.parametrize("graph", [_ring_chords, _ring_hub_spokes], ids=["ring-chords", "ring-hub-spokes"])
+def test_scc_shuffle_regime(spark, monkeypatch, graph):
+    """BROADCAST_ROW_LIMIT forced to 0: every BFS hop is a shuffle
+    frontier join and every visited-set probe a shuffle anti-join (AQE
+    skew splitting covers the hub). Output must stay exact."""
+    from detectingscc_spark.operators import scc as scc_mod
+    from .oracles import kosaraju_scc as _k
+
+    monkeypatch.setattr(scc_mod, "BROADCAST_ROW_LIMIT", 0)
+    edges, n = graph()
     df = spark.createDataFrame(edges, "src long, dst long")
     res = strongly_connected_components(spark, df)
     got = {r["id"]: r["scc_id"] for r in res.collect()}
     assert got == _k(edges, list(range(n)))
+    assert len(set(got.values())) == 1  # the ring makes it one SCC
 
 
 def test_entry_contract(spark):
@@ -143,14 +125,3 @@ def test_scc_sample2_giant(spark):
     got, expect, v = _run_scc(spark, "sample2.gr", local_finish_edges=50_000)
     assert got == expect
     assert len(set(got.values())) == 4889
-
-
-@pytest.mark.parametrize("name,unroll", [("sample5.gr", 2), ("sample128.gr", 2), ("sample128.gr", 4)])
-def test_scc_bfs_unroll_windows(spark, name, unroll):
-    """Windowed BFS (k hops per driver action, tagged levels, last level
-    = next frontier) must agree with the oracle; sample128 has depth > 4
-    so windows genuinely chain, and its cycles exercise the in-window
-    dedup anti-joins."""
-    got, expect, _ = _run_scc(spark, name, bfs_unroll=unroll)
-    assert got == expect
-    assert len(set(got.values())) == GOLDEN[name]

@@ -3,6 +3,7 @@ agree with the Kosaraju oracle on seeded Erdos-Renyi digraphs and on the
 degenerate shapes fixtures don't cover (no edges, self-loops only,
 2-cycles, star)."""
 
+import functools
 import random
 
 import pytest
@@ -10,6 +11,7 @@ import pytest
 from detectingscc_spark.operators.coloring import scc_coloring
 from detectingscc_spark.operators.partitioned import scc_partitioned
 from detectingscc_spark.operators.scc import strongly_connected_components
+from detectingscc_spark.plans.superstep import SuperstepRunner
 
 from .oracles import kosaraju_scc
 
@@ -22,7 +24,6 @@ def _check_all_variants(spark, erows, vids):
     exp = kosaraju_scc(erows, vids)
     for fn, name in (
         (lambda: strongly_connected_components(spark, edges, verts), "fbtrim"),
-        (lambda: strongly_connected_components(spark, edges, verts, bfs_unroll=3), "fbtrim-u3"),
         (lambda: scc_coloring(spark, edges, verts), "coloring"),
         (lambda: scc_partitioned(spark, edges, verts, n_parts=4), "partitioned"),
     ):
@@ -49,3 +50,26 @@ def test_scc_degenerate_shapes(spark):
     # disjoint 2-cycles + isolated vertex + star into a cycle
     erows = [(0, 1), (1, 0), (2, 3), (3, 2), (5, 6), (6, 7), (7, 5), (4, 5)]
     _check_all_variants(spark, erows, list(range(8)))
+
+
+def test_scc_operators_release_working_frames(spark):
+    """Once an SCC-family operator returns, its runner holds only the
+    `done_*` fragments the result reads: every working frame (active
+    set, residual, BFS state and levels) is released."""
+    rng = random.Random(5)
+    n = 300
+    vids = list(range(n))
+    erows = sorted({(rng.randrange(n), rng.randrange(n)) for _ in range(900)})
+    edges = spark.createDataFrame(erows, "src long, dst long")
+    verts = spark.createDataFrame([(v,) for v in vids], "id long")
+    exp = kosaraju_scc(erows, vids)
+    for fn, name in (
+        (strongly_connected_components, "fbtrim"),
+        (scc_coloring, "coloring"),
+        (functools.partial(scc_partitioned, n_parts=4), "partitioned"),
+    ):
+        runner = SuperstepRunner(spark)
+        got = {r["id"]: r["scc_id"] for r in fn(spark, edges, verts, runner=runner).collect()}
+        assert got == exp, f"{name} mismatch"
+        left = sorted(s for s in runner._live if not s.startswith("done_"))
+        assert left == [], f"{name} left {left} live"

@@ -7,7 +7,6 @@ from detectingscc_spark.operators.scc import strongly_connected_components
 from detectingscc_spark.plans.superstep import SuperstepRunner
 
 n = int(os.environ.get("N", "100000"))
-expand = os.environ.get("EXPAND", "join")
 import os as _os
 _master = _os.environ.get("MASTER")
 _extra = {}
@@ -36,7 +35,7 @@ class T(SuperstepRunner):
 r = T(spark)
 t0 = time.time()
 res = strongly_connected_components(spark, edges, verts.select("id") if "fid" in getattr(verts, "columns", []) or "repo" in getattr(verts, "columns", []) else verts,
-        runner=r, local_finish_edges=int(os.environ.get("LOCAL_FINISH", "100000")), expand=expand,
+        runner=r, local_finish_edges=int(os.environ.get("LOCAL_FINISH", "100000")),
         trim_iters=int(os.environ.get("TRIM_ITERS", "4")))
 cnt = res.count()
-print(json.dumps({"n": n, "edges": ne, "wall": time.time()-t0, "counters": r.counters, "expand": expand}), flush=True)
+print(json.dumps({"n": n, "edges": ne, "wall": time.time()-t0, "counters": r.counters}), flush=True)
