@@ -1,4 +1,7 @@
-"""Graph derivation helpers.
+"""Graph input helpers.
+
+`canonical_edges` and `vertex_universe` turn an operator's raw edge input
+into the simple directed graph and vertex set every operator runs on.
 
 `derived_edges` builds a deterministic directed graph from the driver's
 TPC-H-ish testdata so graph operators can be correctness-checked against
@@ -13,6 +16,28 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 DERIVED_V = 997  # prime vertex-space size for the testdata-derived graph
+
+
+def canonical_edges(edges: DataFrame) -> DataFrame:
+    """edges(src, dst) as longs, deduplicated, without self loops: the
+    simple directed graph the operators compute on. SCC membership is
+    invariant under both (the reference keeps duplicate edges,
+    /root/reference/src/load.cpp; results agree — see tests on the
+    dup-edge fixture)."""
+    return (
+        edges.select(F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst"))
+        .where(F.col("src") != F.col("dst"))
+        .distinct()
+    )
+
+
+def vertex_universe(E: DataFrame, vertices: DataFrame | None = None) -> DataFrame:
+    """(id: long) = every endpoint of `E`, widened by the optional
+    `vertices(id)` frame (isolated vertices)."""
+    verts = E.select(F.col("src").alias("id")).union(E.select(F.col("dst").alias("id"))).distinct()
+    if vertices is not None:
+        verts = verts.union(vertices.select(F.col("id").cast("long"))).distinct()
+    return verts
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -34,5 +59,4 @@ def derived_edges(spark: SparkSession, sf_dir: str, v: int = DERIVED_V) -> DataF
 
 
 def derived_vertices(spark: SparkSession, sf_dir: str, v: int = DERIVED_V) -> DataFrame:
-    e = derived_edges(spark, sf_dir, v)
-    return e.select(F.col("src").alias("id")).union(e.select(F.col("dst").alias("id"))).distinct()
+    return vertex_universe(derived_edges(spark, sf_dir, v))

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..graph import canonical_edges
 from ..plans.superstep import SuperstepRunner
 
 
@@ -37,12 +38,7 @@ def bfs_distances(
     `sources` (an `id` DataFrame) within `max_hops` directed hops;
     sources themselves have dist 0."""
     runner = runner or SuperstepRunner(spark, run_id="bfs")
-    E = (
-        edges.select(F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    E, _ = runner.tick("edges", E.repartition("src"), detach=False)
+    E, _ = runner.tick("edges", canonical_edges(edges), detach=False)
 
     seed = sources.select(F.col("id").cast("long")).distinct().withColumn(
         "dist", F.lit(0).cast("long")

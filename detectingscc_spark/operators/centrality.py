@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..graph import canonical_edges
 from ..plans.superstep import SuperstepRunner
 
 
@@ -41,12 +42,7 @@ def landmark_distances(
     each landmark within `max_hops` directed hops (dist 0 = the landmark
     itself). All landmarks advance in one keyed frontier."""
     runner = runner or SuperstepRunner(spark, run_id="landmarks")
-    E = (
-        edges.select(F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    E, _ = runner.tick("edges", E.repartition("src"), detach=False)
+    E, _ = runner.tick("edges", canonical_edges(edges), detach=False)
 
     seed = (
         landmarks.select(F.col("id").cast("long"))

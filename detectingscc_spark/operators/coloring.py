@@ -30,14 +30,13 @@ scale):
   * trim1's endpoint probes are semi-joins against the RAW src/dst
     columns — the old per-side `.distinct()` bought nothing (the hash
     build dedups) and cost an exchange each;
-  * each propagation tick applies pointer jumps FIRST, against the
-    already-MATERIALIZED color frame (cheap broadcast self-lookups), and
-    then one pull-max — the old pull-then-jump self-join re-evaluated
-    the whole un-materialized pull subtree twice per tick (Spark does
-    not reuse subplans) and sort-merge-joined it. Two jumps per tick
-    triple path-shortening per round; any trajectory reaches the same
-    unique fixpoint (max forward-reachable id), detected by the same
-    monotone color-sum observation;
+  * each propagation tick is one pull-max `label_step`
+    (operators/components.py, shared with WCC and the FB engine's
+    decomposition): two pointer jumps FIRST, against the already-
+    MATERIALIZED color frame (cheap broadcast self-lookups), then one
+    pull-max. Two jumps per tick triple path-shortening per round; any
+    trajectory reaches the same unique fixpoint (max forward-reachable
+    id), detected by the monotone color-sum observation;
   * the class-confined BFS keeps the visited set as a lazy union of
     materialized per-hop fragments (one tick per hop, compacted every
     8 hops — operators/bfs.py discipline) instead of re-materializing
@@ -54,8 +53,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.superstep import SuperstepRunner
-from .scc import _bc, _canonical_edges
+from ..graph import canonical_edges, vertex_universe
+from ..plans.superstep import SuperstepRunner, bc, broadcastable
+from .components import label_step
+from .scc import _part_target
 
 
 def scc_coloring(
@@ -67,15 +68,11 @@ def scc_coloring(
     max_rounds: int = 64,
     max_prop_iters: int = 200,
     max_bfs_hops: int = 10_000,
-    prop_jumps: int = 2,
 ) -> DataFrame:
     runner = runner or SuperstepRunner(spark, run_id="scc_coloring")
-    E = _canonical_edges(edges)
-    verts = E.select(F.col("src").alias("id")).union(E.select(F.col("dst").alias("id"))).distinct()
-    if vertices is not None:
-        verts = verts.union(vertices.select(F.col("id").cast("long"))).distinct()
+    E = canonical_edges(edges)
 
-    active, a_cnt = runner.tick("active", verts.select("id"))
+    active, a_cnt = runner.tick("active", vertex_universe(E, vertices).select("id"))
     re, re_cnt = runner.tick("re", E, detach=False)
 
     done_frags: list[DataFrame] = []
@@ -106,7 +103,7 @@ def scc_coloring(
         # residual edges between active vertices (round 1: every vertex is
         # active, the filter is a no-op — skip the tick entirely)
         if rnd > 1:
-            av = _bc(active, a_cnt)
+            av = bc(active, a_cnt)
             re, re_cnt = runner.tick(
                 "re",
                 re.join(av.withColumnRenamed("id", "src"), "src", "left_semi")
@@ -134,28 +131,22 @@ def scc_coloring(
         if trimmed:
             re, re_cnt = runner.tick(
                 "re",
-                re.join(_bc(active, a_cnt).withColumnRenamed("id", "src"), "src", "left_semi")
-                .join(_bc(active, a_cnt).withColumnRenamed("id", "dst"), "dst", "left_semi"),
+                re.join(bc(active, a_cnt).withColumnRenamed("id", "src"), "src", "left_semi")
+                .join(bc(active, a_cnt).withColumnRenamed("id", "dst"), "dst", "left_semi"),
                 detach=False,
             )
 
         # ---- max-color propagation with pointer jumping ---------------
-        # color(v) = max id forward-reachable. Each tick: `prop_jumps`
-        # pointer jumps against the MATERIALIZED previous colors (pure
-        # broadcast lookups, no recompute), then one pull-max over
-        # out-edges. Monotone increasing; sum fixpoint = converged.
-        from pyspark.sql import Observation
-
-        from .scc import BROADCAST_ROW_LIMIT, _part_target
-
-        # while the color frame is broadcast-able every pull join is
+        # color(v) = max id forward-reachable: one pull-max `label_step`
+        # per tick. Monotone increasing; sum fixpoint = converged.
+        # While the color frame is broadcast-able every pull join is
         # broadcast-hash, so a PERSISTED copy of the residual partitioned
         # by the pull's AGG key (src) makes each propagation tick's
         # aggregation exchange-free (persist, unlike localCheckpoint,
         # preserves partitioning and the broadcast join carries it
         # through). Past the broadcast regime the pull is a shuffle join
         # on dst and the re frame is used as-is.
-        if a_cnt <= BROADCAST_ROW_LIMIT:
+        if broadcastable(a_cnt):
             prop_re, _ = runner.tick(
                 "prop_re",
                 re.repartition(_part_target(re_cnt), "src"),
@@ -164,37 +155,12 @@ def scc_coloring(
         else:
             prop_re = re
 
-        col_df, _ = runner.tick("color", active.select("id", F.col("id").alias("color")))
+        col_df, _ = runner.tick("color", active.select("id", F.col("id").alias("label")))
         prev = None
         converged = False
         for it in range(max_prop_iters):
             runner.bump("FWD_iterations")
-            cur = col_df
-            for _j in range(prop_jumps):
-                # lookup side is the detached (stats-reset) color frame —
-                # hint the broadcast from the driver-known row count
-                cur = cur.join(
-                    _bc(col_df.select(F.col("id").alias("color"), F.col("color").alias("cc")), a_cnt),
-                    "color",
-                    "left",
-                ).select(
-                    "id",
-                    F.greatest(F.col("color"), F.coalesce(F.col("cc"), F.col("color"))).alias("color"),
-                )
-            nbr = (
-                prop_re.join(_bc(cur.select(F.col("id").alias("dst"), F.col("color").alias("nc")), a_cnt), "dst")
-                .groupBy("src")
-                .agg(F.max("nc").alias("nmax"))
-                .select(F.col("src").alias("id"), "nmax")
-            )
-            c1 = cur.join(_bc(nbr, a_cnt), "id", "left").select(
-                "id", F.greatest(F.col("color"), F.coalesce(F.col("nmax"), F.col("color"))).alias("color")
-            )
-            obs = Observation(f"col_{rnd}_{it}")
-            col_df, _ = runner.tick(
-                "color", c1.observe(obs, F.sum("color").alias("s")), count=False
-            )
-            cur_sum = obs.get["s"]
+            col_df, cur_sum = label_step(runner, "color", prop_re, col_df, a_cnt, "max")
             if cur_sum == prev:
                 converged = True
                 prev_iters = it + 1
@@ -210,8 +176,8 @@ def scc_coloring(
 
         # ---- forward BFS from roots within color class -> SCCs --------
         ce = (
-            re.join(_bc(col_df.select(F.col("id").alias("src"), F.col("color").alias("sc")), a_cnt), "src")
-            .join(_bc(col_df.select(F.col("id").alias("dst"), F.col("color").alias("dc")), a_cnt), "dst")
+            re.join(bc(col_df.select(F.col("id").alias("src"), F.col("label").alias("sc")), a_cnt), "src")
+            .join(bc(col_df.select(F.col("id").alias("dst"), F.col("label").alias("dc")), a_cnt), "dst")
             .where(F.col("sc") == F.col("dc"))
             .select("src", "dst")
         )
@@ -224,7 +190,7 @@ def scc_coloring(
         # visited set = compacted base + materialized per-hop fragments
         # (lazy union, one tick per hop — operators/bfs.py discipline)
         seed, v_cnt = runner.tick(
-            "vis_0", col_df.where(F.col("color") == F.col("id")).select("id"), detach=False
+            "vis_0", col_df.where(F.col("label") == F.col("id")).select("id"), detach=False
         )
         COMPACT_EVERY = 8
         frag_slots = ["vis_0"]
@@ -237,7 +203,7 @@ def scc_coloring(
                 raise RuntimeError("coloring BFS exceeded max hops")
             runner.bump("BWD_iterations")
             new = (
-                ce.join(_bc(front.withColumnRenamed("id", "src"), f_cnt), "src")
+                ce.join(bc(front.withColumnRenamed("id", "src"), f_cnt), "src")
                 .select(F.col("dst").alias("id"))
                 .distinct()
                 .join(vis_view, "id", "left_anti")
@@ -259,9 +225,9 @@ def scc_coloring(
 
         runner.log("class_bfs_done", hops=hops)
         # retired = visited; scc label = min member id per color class
-        retired = vis_view.join(_bc(col_df, a_cnt), "id")
-        reps = retired.groupBy("color").agg(F.min("id").alias("scc_id"))
-        emit_done(retired.join(_bc(reps, a_cnt), "color").select("id", "scc_id"))
+        retired = vis_view.join(bc(col_df, a_cnt), "id")
+        reps = retired.groupBy("label").agg(F.min("id").alias("scc_id"))
+        emit_done(retired.join(bc(reps, a_cnt), "label").select("id", "scc_id"))
         active, a_cnt = runner.tick("active", active.join(vis_view, "id", "left_anti"))
         runner.log("coloring_round", round=rnd, active=a_cnt, prop_iters=prev_iters, bfs_hops=hops)
         for s in ("color", "ce", "vis_base", "prop_re", *frag_slots):

@@ -13,11 +13,49 @@ makes convergence O(log diameter) supersteps instead of O(diameter).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.superstep import SuperstepRunner
-from .scc import _bc
+from ..graph import canonical_edges, vertex_universe
+from ..plans.superstep import SuperstepRunner, bc
+
+
+def label_step(
+    runner: SuperstepRunner, slot: str, edges: DataFrame, lab: DataFrame, n: int, agg: str
+) -> tuple[DataFrame, int]:
+    """One label-propagation superstep over (id, label): the reference's
+    pull-extremum plus pointer jump (pull-min `propagateRange1` with
+    `propagateRange2`, /root/reference/src/scc_kernels.cu:496-536; pull-max
+    `colorPropagation`, :539-564). `agg` is "min" or "max".
+
+    Two pointer jumps run FIRST, as broadcast self-lookups against the
+    MATERIALIZED labels `lab` (a post-pull self-join would re-evaluate the
+    whole un-materialized pull subtree twice per tick). Then one pull over
+    `edges` (join on dst, aggregate by src) and the combine with the
+    current labels. Label-side joins are broadcast-hinted from the
+    driver-known row count `n` (the detached frame's stats are reset by
+    design). Labels move monotonically, and any refinement order reaches
+    the same unique fixpoint, so callers stop when the label sum repeats.
+    The sum rides as an observed metric of the tick's own materialization
+    job: one driver action per step. Returns (labels, label sum)."""
+    ext, pull = (F.least, F.min) if agg == "min" else (F.greatest, F.max)
+    cur = lab
+    for _ in range(2):
+        cur = cur.join(
+            bc(lab.select(F.col("id").alias("label"), F.col("label").alias("ll")), n), "label", "left"
+        ).select("id", ext(F.col("label"), F.coalesce(F.col("ll"), F.col("label"))).alias("label"))
+    nbr = (
+        edges.join(bc(cur.select(F.col("id").alias("dst"), F.col("label").alias("nl")), n), "dst")
+        .groupBy("src")
+        .agg(pull("nl").alias("nx"))
+        .select(F.col("src").alias("id"), "nx")
+    )
+    new = cur.join(bc(nbr, n), "id", "left").select(
+        "id", ext(F.col("label"), F.coalesce(F.col("nx"), F.col("label"))).alias("label")
+    )
+    obs = Observation()
+    lab, _ = runner.tick(slot, new.observe(obs, F.sum("label").alias("s")), count=False)
+    return lab, obs.get["s"]
 
 
 def connected_components(
@@ -30,71 +68,16 @@ def connected_components(
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     runner = runner or SuperstepRunner(spark, checkpoint_dir=checkpoint_dir, run_id="cc")
-    E = (
-        edges.select(F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+    E = canonical_edges(edges)
     und = E.unionByName(E.select(F.col("dst").alias("src"), F.col("src").alias("dst"))).distinct()
 
-    verts = E.select(F.col("src").alias("id")).union(E.select(F.col("dst").alias("id"))).distinct()
-    if vertices is not None:
-        verts = verts.union(vertices.select(F.col("id").cast("long"))).distinct()
-
-    from pyspark.sql import Observation
-
-    from .scc import BROADCAST_ROW_LIMIT
-
-    lab = verts.select("id", F.col("id").alias("label"))
-    lab, n_verts = runner.tick("label", lab)
-
-    # In the broadcast regime (label frame under the broadcast limit) the
-    # pull join is broadcast-hash, so partitioning the PERSISTED edge
-    # frame by the pull's AGG key (src) carries through the join and
-    # makes every iteration's aggregation exchange-free (persist — unlike
-    # localCheckpoint — preserves partitioning). Past it the pull is a
-    # sort-merge join on dst, where dst partitioning saves reshuffling
-    # the edge table every iteration instead.
-    und_key = "src" if n_verts <= BROADCAST_ROW_LIMIT else "dst"
-    und, _ = runner.tick(
-        "edges", und.repartition(und_key), truncate=False, count=False, detach=False
-    )
+    lab, n_verts = runner.tick("label", vertex_universe(E, vertices).select("id", F.col("id").alias("label")))
+    und = runner.keyed_edges("edges", und, "src", "dst", n_verts)
     prev_sum = None  # labels monotone non-increasing; sum fixpoint = converged
-
     for i in range(max_iters):
         runner.superstep = i + 1
         runner.bump("iterations")
-        # pointer jumps FIRST, as broadcast self-lookups against the
-        # MATERIALIZED previous labels (broadcast-hinted from the
-        # driver-known vertex count — the detached frame's stats are
-        # reset by design). The old post-pull self-join re-evaluated the
-        # whole un-materialized pull subtree twice per tick; any
-        # refinement order reaches the same unique fixpoint (component
-        # min id), detected by the same monotone label-sum observation.
-        cur = lab
-        for _j in range(2):
-            cur = cur.join(
-                _bc(lab.select(F.col("id").alias("label"), F.col("label").alias("ll")), n_verts),
-                "label",
-                "left",
-            ).select(
-                "id",
-                F.least(F.col("label"), F.coalesce(F.col("ll"), F.col("label"))).alias("label"),
-            )
-        nbr = (
-            und.join(_bc(cur.select(F.col("id").alias("dst"), F.col("label").alias("nl")), n_verts), "dst")
-            .groupBy("src")
-            .agg(F.min("nl").alias("nmin"))
-            .select(F.col("src").alias("id"), "nmin")
-        )
-        l1 = cur.join(_bc(nbr, n_verts), "id", "left").select(
-            "id", F.least(F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))).alias("label")
-        )
-        # convergence sum rides as an observed metric of the tick's own
-        # materialization job — one driver action per iteration, not three
-        obs = Observation(f"cc_{i}")
-        lab, _ = runner.tick("label", l1.observe(obs, F.sum("label").alias("s")), count=False)
-        new_sum = obs.get["s"]
+        lab, new_sum = label_step(runner, "label", und, lab, n_verts, "min")
         runner.log("cc_iter", label_sum=int(new_sum))
         runner.maybe_checkpoint({"label": lab})
         if new_sum == prev_sum:

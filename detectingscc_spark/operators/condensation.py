@@ -112,7 +112,7 @@ def dag_layers(
     dag = dag_edges.select(
         F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst")
     ).distinct()
-    dag, _ = runner.tick("dag", dag.repartition("src"), detach=False)
+    dag, _ = runner.tick("dag", dag, detach=False)
     universe = dag.select(F.col("src").alias("id")).union(dag.select(F.col("dst").alias("id")))
     if comps is not None:
         universe = universe.union(comps.select(F.col("id").cast("long")))

@@ -31,9 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from .scc import BROADCAST_ROW_LIMIT
+from ..plans.superstep import SuperstepRunner
 
 
 def _normalized(v: DataFrame, raw: DataFrame, total: DataFrame, out: str) -> DataFrame:
@@ -45,28 +44,55 @@ def _normalized(v: DataFrame, raw: DataFrame, total: DataFrame, out: str) -> Dat
     )
 
 
-def _keyed_copies(e: DataFrame) -> dict[str, DataFrame]:
-    """Persist the edge table twice, hash-partitioned by src and by dst —
+def _push(edges: DataFrame, raw_prev: DataFrame, total_prev: DataFrame | None,
+          key_in: str, key_out: str, weight: str | None = None):
+    """One matrix application: raw_out(v) = Σ_{edges} raw_prev(u)/t
+    (times the edge's `weight` column, if given: (raw/t)*w, the same
+    div-then-mul order as the round-6 materialized s*w form). The
+    division by the carried normalizer happens per edge row — the
+    identical double op the round-6 materialized-scores form applied per
+    vertex — so sums see bit-identical terms. Seed half-step (total_prev
+    None): scores are already normalized. ONE driver action: the eager
+    checkpoint of the raw push (the normalizer and the next half-step
+    both read it). Returns (raw, 1-row total frame)."""
+    j = edges.join(raw_prev.withColumnRenamed("id", key_in), key_in)
+    if total_prev is None:
+        s = F.col("raw")
+    else:
+        j = j.crossJoin(F.broadcast(total_prev))
+        s = F.col("raw") / F.col("t")
+    if weight is not None:
+        s = s * F.col(weight)
+    raw = j.groupBy(F.col(key_out).alias("id")).agg(F.sum(s).alias("raw")).localCheckpoint(eager=True)
+    return raw, raw.agg(F.sum("raw").alias("t"))
+
+
+def _hub_authority(spark: SparkSession, run_id: str, e: DataFrame, v: DataFrame, n: int,
+                   iters: int, w_auth: str | None = None, w_hub: str | None = None) -> DataFrame:
+    """(id, auth, hub) after `iters` alternating auth/hub half-steps over
+    e(src, dst, ...) from the uniform hub start, optionally weighted by
+    the edge columns `w_auth` / `w_hub`. The edges are persisted twice —
     the dual forward/backward adjacency layout the reference itself
-    keeps. persist (unlike localCheckpoint) preserves partitioning, so a
-    half-step that broadcast-joins the score side and aggregates on the
-    copy's key plans its aggregation exchange-free; past the broadcast
-    regime the copy keyed by the JOIN key keeps the edge table from
-    reshuffling. Cost: the edge bytes twice, the CSR+CSC trade."""
-    out = {}
-    for key in ("src", "dst"):
-        c = e.repartition(key).persist(StorageLevel.MEMORY_AND_DISK)
-        c.write.format("noop").mode("overwrite").save()
-        out[key] = c
-    return out
-
-
-def _unpersist_copies(copies: dict[str, DataFrame]) -> None:
-    for c in copies.values():
-        try:
-            c.unpersist()
-        except Exception:
-            pass
+    keeps: the auth push joins on src and aggregates by dst, the hub push
+    the reverse. Cost: the edge bytes twice, the CSR+CSC trade."""
+    runner = SuperstepRunner(spark, run_id=run_id)
+    try:
+        auth_e = runner.keyed_edges("auth_e", e, "dst", "src", n)
+        hub_e = runner.keyed_edges("hub_e", e, "src", "dst", n)
+        hub_raw = v.select("id", (F.lit(1.0) / F.lit(float(n))).alias("raw"))
+        h_t = None
+        for _ in range(iters):
+            auth_raw, a_t = _push(auth_e, hub_raw, h_t, "src", "dst", w_auth)
+            hub_raw, h_t = _push(hub_e, auth_raw, a_t, "dst", "src", w_hub)
+    finally:
+        # safe to release: the result plan reads only v and the
+        # checkpointed raw frames, never the edge copies
+        runner.release_all()
+    return (
+        _normalized(v, auth_raw, a_t, "auth")
+        .join(_normalized(v, hub_raw, h_t, "hub"), "id")
+        .select("id", "auth", "hub")
+    )
 
 
 def hits(
@@ -92,50 +118,7 @@ def hits(
         # ANSI mode constant-folds the 1/n seed at plan time, so an empty
         # universe must short-circuit rather than build a 1/0 literal
         return v.select("id", F.lit(0.0).alias("auth"), F.lit(0.0).alias("hub"))
-
-    ecopies = _keyed_copies(e)
-    bcast_mode = n <= BROADCAST_ROW_LIMIT
-
-    def _push(raw_prev: DataFrame, total_prev: DataFrame | None,
-              key_in: str, key_out: str):
-        """One matrix application: raw_out(v) = Σ_{edges} raw_prev(u)/t.
-        The division by the carried normalizer happens per edge row —
-        the identical double op the round-6 materialized-scores form
-        applied per vertex — so sums see bit-identical terms. Seed
-        half-step (total_prev None): scores are already normalized.
-        ONE driver action: the eager checkpoint of the raw push (the
-        normalizer and the next half-step both read it). The edge copy
-        keyed by the AGG key makes the aggregation exchange-free while
-        the score side broadcasts; past that, the JOIN-key copy keeps
-        the edge table from reshuffling."""
-        ek = ecopies[key_out] if bcast_mode else ecopies[key_in]
-        j = ek.join(raw_prev.withColumnRenamed("id", key_in), key_in)
-        if total_prev is None:
-            s = F.col("raw")
-        else:
-            j = j.crossJoin(F.broadcast(total_prev))
-            s = F.col("raw") / F.col("t")
-        raw = (
-            j.groupBy(F.col(key_out).alias("id"))
-            .agg(F.sum(s).alias("raw"))
-        ).localCheckpoint(eager=True)
-        total = raw.agg(F.sum("raw").alias("t"))
-        return raw, total
-
-    seed = v.select("id", (F.lit(1.0) / F.lit(float(n))).alias("raw"))
-    auth_raw = hub_raw = None
-    a_t = h_t = None
-    for k in range(iters):
-        auth_raw, a_t = _push(hub_raw if k else seed, h_t if k else None, "src", "dst")
-        hub_raw, h_t = _push(auth_raw, a_t, "dst", "src")
-    # safe to release: the result plan reads only v and the checkpointed
-    # raw frames, never the edge copies
-    _unpersist_copies(ecopies)
-    return (
-        _normalized(v, auth_raw, a_t, "auth")
-        .join(_normalized(v, hub_raw, h_t, "hub"), "id")
-        .select("id", "auth", "hub")
-    )
+    return _hub_authority(spark, "hits", e, v, n, iters)
 
 
 def eigencentrality(
@@ -160,31 +143,16 @@ def eigencentrality(
     if n == 0:
         # see hits(): the 1/n seed would constant-fold to 1/0 under ANSI
         return v.select("id", F.lit(0.0).alias("score"))
-    # persist the symmetrized table once (it was re-derived — distinct +
-    # union — every iteration), keyed by the agg key in the broadcast
-    # regime so each iteration's aggregation is exchange-free, by the
-    # join key past it
-    sym_key = "w" if n <= BROADCAST_ROW_LIMIT else "u"
-    sym = sym.repartition(sym_key).persist(StorageLevel.MEMORY_AND_DISK)
-    sym.write.format("noop").mode("overwrite").save()
-    raw = v.select("id", (F.lit(1.0) / F.lit(float(n))).alias("raw"))
-    total = None
-    for k in range(iters):
-        j = sym.join(raw.withColumnRenamed("id", "u"), "u")
-        if total is None:
-            s = F.col("raw")
-        else:
-            j = j.crossJoin(F.broadcast(total))
-            s = F.col("raw") / F.col("t")
-        raw = (
-            j.groupBy(F.col("w").alias("id"))
-            .agg(F.sum(s).alias("raw"))
-        ).localCheckpoint(eager=True)
-        total = raw.agg(F.sum("raw").alias("t"))
+    # every iteration reads the symmetrized table: persist it once
+    runner = SuperstepRunner(spark, run_id="eigen")
     try:
-        sym.unpersist()
-    except Exception:
-        pass
+        sym = runner.keyed_edges("sym", sym, "w", "u", n)
+        raw = v.select("id", (F.lit(1.0) / F.lit(float(n))).alias("raw"))
+        total = None
+        for _ in range(iters):
+            raw, total = _push(sym, raw, total, "u", "w")
+    finally:
+        runner.release_all()
     return _normalized(v, raw, total, "score")
 
 
@@ -230,39 +198,4 @@ def salsa(
     if n == 0:
         # see hits(): the 1/n seed would constant-fold to 1/0 under ANSI
         return v.select("id", F.lit(0.0).alias("auth"), F.lit(0.0).alias("hub"))
-    ecopies = _keyed_copies(ew)
-    bcast_mode = n <= BROADCAST_ROW_LIMIT
-
-    def _wpush(raw_prev: DataFrame, total_prev: DataFrame | None,
-               key_in: str, key_out: str, w: str):
-        """Weighted half-step: the per-edge term is (raw/t)*w — the same
-        div-then-mul order as the round-6 materialized s*w form. Edge
-        copy choice: agg key in the broadcast regime, join key past it
-        (see _keyed_copies)."""
-        ek = ecopies[key_out] if bcast_mode else ecopies[key_in]
-        j = ek.join(raw_prev.withColumnRenamed("id", key_in), key_in)
-        if total_prev is None:
-            s = F.col("raw")
-        else:
-            j = j.crossJoin(F.broadcast(total_prev))
-            s = F.col("raw") / F.col("t")
-        raw = (
-            j.groupBy(F.col(key_out).alias("id"))
-            .agg(F.sum(s * F.col(w)).alias("raw"))
-        ).localCheckpoint(eager=True)
-        total = raw.agg(F.sum("raw").alias("t"))
-        return raw, total
-
-    seed = v.select("id", (F.lit(1.0) / F.lit(float(n))).alias("raw"))
-    auth_raw = hub_raw = None
-    a_t = h_t = None
-    for k in range(iters):
-        auth_raw, a_t = _wpush(hub_raw if k else seed, h_t if k else None,
-                               "src", "dst", "w_out")
-        hub_raw, h_t = _wpush(auth_raw, a_t, "dst", "src", "w_in")
-    _unpersist_copies(ecopies)
-    return (
-        _normalized(v, auth_raw, a_t, "auth")
-        .join(_normalized(v, hub_raw, h_t, "hub"), "id")
-        .select("id", "auth", "hub")
-    )
+    return _hub_authority(spark, "salsa", ew, v, n, iters, "w_out", "w_in")

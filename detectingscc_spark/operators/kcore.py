@@ -55,7 +55,7 @@ def kcore(
     """
     runner = runner or SuperstepRunner(spark, run_id=f"kcore{k}")
     und = undirected_edges(edges)
-    und, _ = runner.tick("und", und.repartition("a"), detach=False)
+    und, _ = runner.tick("und", und, detach=False)
     alive = und.select(F.col("a").alias("id")).union(und.select(F.col("b").alias("id"))).distinct()
     alive, n_alive = runner.tick("alive", alive)
 

@@ -16,8 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.superstep import SuperstepRunner
-from .scc import _bc
+from ..graph import canonical_edges, vertex_universe
+from ..plans.superstep import SuperstepRunner, bc
 
 
 def label_propagation(
@@ -30,49 +30,27 @@ def label_propagation(
 ) -> DataFrame:
     """Return (id: long, label: long) after `rounds` synchronous rounds."""
     runner = runner or SuperstepRunner(spark, run_id="lpa")
-    E = (
-        edges.select(F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+    E = canonical_edges(edges)
     und = E.unionByName(E.select(F.col("dst").alias("src"), F.col("src").alias("dst"))).distinct()
 
-    verts = E.select(F.col("src").alias("id")).union(E.select(F.col("dst").alias("id"))).distinct()
-    if vertices is not None:
-        verts = verts.union(vertices.select(F.col("id").cast("long"))).distinct()
-
-    lab = verts.select("id", F.col("id").alias("label"))
-    lab, n_verts = runner.tick("label", lab)
-
-    # broadcast regime: the vote join is broadcast-hash, so a PERSISTED
-    # edge frame partitioned by the vote aggs' key (dst) makes both
-    # per-round aggregations exchange-free (persist preserves
-    # partitioning; localCheckpoint does not). Past the broadcast limit
-    # the join is sort-merge on src — partition by src there so rounds
-    # never reshuffle the edge table.
-    from .scc import BROADCAST_ROW_LIMIT
-
-    und_key = "dst" if n_verts <= BROADCAST_ROW_LIMIT else "src"
-    und, _ = runner.tick(
-        "edges", und.repartition(und_key), truncate=False, count=False, detach=False
-    )
+    lab, n_verts = runner.tick("label", vertex_universe(E, vertices).select("id", F.col("id").alias("label")))
+    # the vote join is on src and both vote aggs group by dst
+    und = runner.keyed_edges("edges", und, "dst", "src", n_verts)
 
     for i in range(rounds):
         runner.superstep = i + 1
         runner.bump("iterations")
         # label side broadcast-hinted from the driver-known vertex count
-        # (the detached frame's stats are reset by design); the und frame
-        # is partitioned by dst, which also satisfies both vote aggs'
-        # clustering, so a broadcast-joined round runs exchange-free
+        # (the detached frame's stats are reset by design)
         votes = (
-            und.join(_bc(lab.select(F.col("id").alias("src"), F.col("label").alias("nl")), n_verts), "src")
+            und.join(bc(lab.select(F.col("id").alias("src"), F.col("label").alias("nl")), n_verts), "src")
             .groupBy("dst", "nl")
             .agg(F.count("*").alias("c"))
             .groupBy("dst")
             .agg(F.expr("max_by(nl, struct(c, -nl))").alias("winner"))
             .select(F.col("dst").alias("id"), "winner")
         )
-        new_lab = lab.join(_bc(votes, n_verts), "id", "left").select(
+        new_lab = lab.join(bc(votes, n_verts), "id", "left").select(
             "id", F.coalesce(F.col("winner"), F.col("label")).alias("label")
         )
         lab, _ = runner.tick("label", new_lab, count=False)

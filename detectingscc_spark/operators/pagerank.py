@@ -18,8 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.superstep import SuperstepRunner
-from .scc import BROADCAST_ROW_LIMIT, _bc
+from ..graph import canonical_edges, vertex_universe
+from ..plans.superstep import SuperstepRunner, bc
 
 
 def pagerank(
@@ -37,14 +37,8 @@ def pagerank(
     """Return (id: long, rank: double). Duplicate edges count once
     (graph semantics follow the SCC engine: dedup, keep self-loops out)."""
     runner = runner or SuperstepRunner(spark, checkpoint_dir=checkpoint_dir, run_id="pagerank")
-    E = (
-        edges.select(F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    verts = E.select(F.col("src").alias("id")).union(E.select(F.col("dst").alias("id"))).distinct()
-    if vertices is not None:
-        verts = verts.union(vertices.select(F.col("id").cast("long"))).distinct()
+    E = canonical_edges(edges)
+    verts = vertex_universe(E, vertices)
     outdeg = E.groupBy("src").count().select(F.col("src").alias("id"), F.col("count").alias("od"))
     # fold the dangling marker into the vertex frame ONCE: the per-
     # iteration dangling-mass sum becomes a filter over the rank state
@@ -56,16 +50,10 @@ def pagerank(
     verts = verts.select("id", (~F.col("has_out")).alias("dang"))
     verts, n = runner.tick("verts", verts, detach=False)
 
-    # fold outdeg into the edge table once: each edge carries 1/outdeg(src).
-    # Broadcast regime (rank frame under the limit): the contrib join is
-    # broadcast-hash, so the PERSISTED edge frame partitioned by the
-    # contrib agg's key (dst) makes the per-iteration aggregation
-    # exchange-free (persist preserves partitioning; localCheckpoint does
-    # not). Past the limit the join is sort-merge on src — partition by
-    # src there so iterations shuffle only the rank side.
+    # fold outdeg into the edge table once: each edge carries 1/outdeg(src);
+    # the contrib join is on src and its aggregation groups by dst
     Ew = E.join(outdeg, E["src"] == outdeg["id"]).select("src", "dst", (F.lit(1.0) / F.col("od")).alias("w"))
-    ew_key = "dst" if n <= BROADCAST_ROW_LIMIT else "src"
-    Ew, _ = runner.tick("edges", Ew.repartition(ew_key), truncate=False, count=False, detach=False)
+    Ew = runner.keyed_edges("edges", Ew, "dst", "src", n)
 
     rank = verts.select("id", (F.lit(1.0) / F.lit(n)).alias("rank"), "dang")
     rank, _ = runner.tick("rank", rank)
@@ -84,13 +72,13 @@ def pagerank(
         # past the limit the join falls back to shuffling ONLY the rank
         # side (Ew stays partitioned by the join key src)
         contrib = (
-            Ew.join(_bc(rank.select("id", "rank"), n).withColumnRenamed("id", "src"), "src")
+            Ew.join(bc(rank.select("id", "rank"), n).withColumnRenamed("id", "src"), "src")
             .groupBy("dst")
             .agg(F.sum(F.col("rank") * F.col("w")).alias("c"))
             .select(F.col("dst").alias("id"), "c")
         )
         new_rank = (
-            verts.join(_bc(contrib, n), "id", "left")
+            verts.join(bc(contrib, n), "id", "left")
             .crossJoin(F.broadcast(dm))
             .select(
                 "id",
@@ -151,12 +139,8 @@ def personalized_pagerank(
     folded into the same job via a broadcast 1-row cross join.
     """
     runner = runner or SuperstepRunner(spark, run_id="ppr")
-    E = (
-        edges.select(F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    verts = E.select(F.col("src").alias("id")).union(E.select(F.col("dst").alias("id"))).distinct()
+    E = canonical_edges(edges)
+    verts = vertex_universe(E)
     # restrict S to vertices of the graph BEFORE counting: a source with
     # no incident edges would otherwise make sum(p) < 1 and leak restart
     # mass (vp below only assigns p(v) over the edge-derived vertex set)
@@ -184,10 +168,7 @@ def personalized_pagerank(
     vp, n_v = runner.tick("verts", vp, detach=False)
 
     Ew = E.join(outdeg, E["src"] == outdeg["id"]).select("src", "dst", (F.lit(1.0) / F.col("od")).alias("w"))
-    # same partitioning policy as pagerank(): agg key (dst) in the
-    # broadcast regime, join key (src) past it
-    ew_key = "dst" if n_v <= BROADCAST_ROW_LIMIT else "src"
-    Ew, _ = runner.tick("edges", Ew.repartition(ew_key), truncate=False, count=False, detach=False)
+    Ew = runner.keyed_edges("edges", Ew, "dst", "src", n_v)
 
     rank = vp.select("id", F.col("p").alias("rank"), "dang")
     rank, _ = runner.tick("rank", rank)
@@ -200,13 +181,13 @@ def personalized_pagerank(
             .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm"))
         )
         contrib = (
-            Ew.join(_bc(rank.select("id", "rank"), n_v).withColumnRenamed("id", "src"), "src")
+            Ew.join(bc(rank.select("id", "rank"), n_v).withColumnRenamed("id", "src"), "src")
             .groupBy("dst")
             .agg(F.sum(F.col("rank") * F.col("w")).alias("c"))
             .select(F.col("dst").alias("id"), "c")
         )
         new_rank = (
-            vp.join(_bc(contrib, n_v), "id", "left")
+            vp.join(bc(contrib, n_v), "id", "left")
             .crossJoin(F.broadcast(dm))
             .select(
                 "id",

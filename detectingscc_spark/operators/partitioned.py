@@ -39,6 +39,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..graph import canonical_edges, vertex_universe
 from .scc import _tarjan_local, strongly_connected_components
 
 
@@ -62,14 +63,8 @@ def scc_partitioned(
     bypass the Arrow-batch local phase (identity labels) and are handled
     entirely by the distributed global phase — see module docstring.
     """
-    E = (
-        edges.select(F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    verts = E.select(F.col("src").alias("id")).union(E.select(F.col("dst").alias("id"))).distinct()
-    if vertices is not None:
-        verts = verts.union(vertices.select(F.col("id").cast("long"))).distinct()
+    E = canonical_edges(edges)
+    verts = vertex_universe(E, vertices)
 
     if partitions is not None:
         vp = verts.join(

@@ -38,8 +38,9 @@ Superstep fixed-cost discipline (the scaling-efficiency levers):
     and each hop is materialized on its own: Spark does not reuse
     subplans, so fusing hops into one job recomputes the inner levels.
   * Frontier joins and visited anti-joins broadcast while the driver-
-    known row count is under BROADCAST_ROW_LIMIT; past it they are plain
-    shuffle joins, and AQE skew-join splitting spreads hub adjacency.
+    known row count is under BROADCAST_ROW_LIMIT (plans/superstep.py);
+    past it they are plain shuffle joins, and AQE skew-join splitting
+    spreads hub adjacency.
   * Retired vertices accumulate as materialized fragments; the `done`
     set is their lazy union (no O(done) rewrite per emit).
   * trim1 re-derives the residual lazily per iteration and materializes
@@ -53,30 +54,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.superstep import SuperstepRunner
-
-# (dir,id) rows ~16B each -> <=24MB broadcast. The same bound serves the
-# growing visited set of the BFS anti-join: broadcasting it up to 24MB
-# measured ~10% faster end to end than a shuffle anti-join at 4x scale.
-BROADCAST_ROW_LIMIT = 1_500_000
-
-
-def _bc(df: DataFrame, cnt: int | None) -> DataFrame:
-    """Broadcast hint for driver-known-small frames (frontiers, pivots)."""
-    if cnt is not None and cnt <= BROADCAST_ROW_LIMIT:
-        return F.broadcast(df)
-    return df
-
-
-def _canonical_edges(edges: DataFrame) -> DataFrame:
-    """Dedup + drop self loops. SCC membership is invariant under both
-    (the reference keeps duplicate edges, /root/reference/src/load.cpp;
-    results agree — see tests on the dup-edge fixture)."""
-    return (
-        edges.select(F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst"))
-        .where(F.col("src").isNotNull() & F.col("dst").isNotNull() & (F.col("src") != F.col("dst")))
-        .distinct()
-    )
+from ..graph import canonical_edges, vertex_universe
+from ..plans.superstep import SuperstepRunner, bc, broadcastable
+from .components import label_step
 
 
 def _tarjan_local(edge_rows, vertex_ids):
@@ -170,11 +150,8 @@ def strongly_connected_components(
         rnd = runner.superstep
         first_done = states["done"]
     else:
-        E = _canonical_edges(edges)
-        verts = E.select(F.col("src").alias("id")).union(E.select(F.col("dst").alias("id"))).distinct()
-        if vertices is not None:
-            verts = verts.union(vertices.select(F.col("id").cast("long"))).distinct()
-        init = verts.select("id", F.lit(0).cast("long").alias("range"))
+        E = canonical_edges(edges)
+        init = vertex_universe(E, vertices).select("id", F.lit(0).cast("long").alias("range"))
         active, a_cnt = runner.tick("active", init)
         # round-1 residual: the ONLY pass over the full edge table
         re, _ = runner.tick("re", E.withColumn("range", F.lit(0).cast("long")).repartition("src"), detach=False)
@@ -211,8 +188,8 @@ def strongly_connected_components(
             raise RuntimeError(f"SCC did not converge in {max_rounds} rounds")
 
         def refresh_residual(re, active, a_cnt):
-            a_src = _bc(active, a_cnt).select(F.col("id").alias("src"), F.col("range").alias("srange"))
-            a_dst = _bc(active, a_cnt).select(F.col("id").alias("dst"), F.col("range").alias("drange"))
+            a_src = bc(active, a_cnt).select(F.col("id").alias("src"), F.col("range").alias("srange"))
+            a_dst = bc(active, a_cnt).select(F.col("id").alias("dst"), F.col("range").alias("drange"))
             return runner.tick(
                 "re",
                 re.select("src", "dst")
@@ -281,7 +258,7 @@ def strongly_connected_components(
             .agg((F.sum("o") * F.sum(1 - F.col("o"))).alias("prod"))
         )
         pivots = (
-            active.join(_bc(degs, a_cnt), "id", "left")
+            active.join(bc(degs, a_cnt), "id", "left")
             .select("id", "range", F.coalesce("prod", F.lit(0)).alias("prod"))
             .groupBy("range")
             .agg(F.expr("max_by(id, struct(prod, -id))").alias("pivot"))
@@ -295,7 +272,7 @@ def strongly_connected_components(
         # assembled-state tick) materializes its own derivation — a
         # dedicated state tick was one more job per round for nothing
         state = active.join(
-            _bc(pivots, p_cnt).select(F.col("range"), F.col("pivot")), "range", "left"
+            bc(pivots, p_cnt).select(F.col("range"), F.col("pivot")), "range", "left"
         ).select(
             "id",
             "range",
@@ -309,13 +286,13 @@ def strongly_connected_components(
         # ---- update: FW∩BW = pivot's SCC; survivors re-ranged ---------
         in_scc = state.where(F.col("fw") & F.col("bw"))
         reps = in_scc.groupBy("range").agg(F.min("id").alias("scc_id"))
-        emit_done(in_scc.join(_bc(reps, p_cnt), "range").select("id", "scc_id"))
+        emit_done(in_scc.join(bc(reps, p_cnt), "range").select("id", "scc_id"))
 
         surv = state.where(~(F.col("fw") & F.col("bw"))).withColumn(
             "sub", F.when(F.col("fw"), 1).when(F.col("bw"), 2).otherwise(0)
         )
         regroup = surv.groupBy("range", "sub").agg(F.min("id").alias("new_range"))
-        active = surv.join(_bc(regroup, None), ["range", "sub"]).select(
+        active = surv.join(bc(regroup, None), ["range", "sub"]).select(
             "id", F.col("new_range").alias("range")
         )
         active, a_cnt = runner.tick("active", active)
@@ -388,7 +365,7 @@ def _bfs_join(runner, re_f, re_cnt, state, max_bfs_hops, n_active):
     # partitioning buys nothing — keep the byte-sized coalesce so per-hop
     # scans cost O(data) tasks.
     n_parts_ed = _part_target(2 * re_cnt if re_cnt else None)
-    if n_active <= BROADCAST_ROW_LIMIT:
+    if broadcastable(n_active):
         ed = ed.repartition(n_parts_ed, "dir", "v")
     else:
         ed = ed.coalesce(n_parts_ed)
@@ -415,10 +392,10 @@ def _bfs_join(runner, re_f, re_cnt, state, max_bfs_hops, n_active):
         runner.bump("FWD_iterations")
         runner.bump("BWD_iterations")
         level = (
-            ed.join(_bc(front.withColumnRenamed("id", "u"), cnt), ["dir", "u"])
+            ed.join(bc(front.withColumnRenamed("id", "u"), cnt), ["dir", "u"])
             .select("dir", F.col("v").alias("id"))
             .distinct()
-            .join(_bc(vis, vis_cnt), ["dir", "id"], "left_anti")
+            .join(bc(vis, vis_cnt), ["dir", "id"], "left_anti")
         )
         front, cnt = runner.tick(f"bfs_new_{hops}", level, detach=False)
         if cnt:
@@ -464,7 +441,7 @@ def _trim1_fixpoint(runner, re, re_cnt, active, a_cnt, emit_done, max_iters=4):
         iters += 1
         runner.bump("Trimm_iterations")
         if trimmed_any:
-            sv = _bc(active, a_cnt).select("id")
+            sv = bc(active, a_cnt).select("id")
             cur = re0.join(sv.withColumnRenamed("id", "src"), "src", "left_semi").join(
                 sv.withColumnRenamed("id", "dst"), "dst", "left_semi"
             )
@@ -489,7 +466,7 @@ def _trim1_fixpoint(runner, re, re_cnt, active, a_cnt, emit_done, max_iters=4):
         if trimmed_cnt == 0:
             break
     if trimmed_any:
-        sv = _bc(active, a_cnt).select("id")
+        sv = bc(active, a_cnt).select("id")
         re, re_cnt = runner.tick(
             "re",
             re0.join(sv.withColumnRenamed("id", "src"), "src", "left_semi").join(
@@ -536,7 +513,7 @@ def _trim2(runner, re, re_cnt, active, a_cnt, emit_done):
     emit_done(retired)
     active, a_cnt = runner.tick("active_next", active.join(retired.select("id"), "id", "left_anti"))
     runner.promote("active_next", "active")
-    rt = _bc(retired, r_cnt).select("id")
+    rt = bc(retired, r_cnt).select("id")
     re, re_cnt = runner.tick(
         "re",
         re.join(rt.withColumnRenamed("id", "src"), "src", "left_anti").join(
@@ -554,55 +531,17 @@ def _decompose(runner, re, active, a_cnt, iters):
     """Refine ranges to weak components of the residual graph via
     hash-min label propagation + pointer jumping (reference's 'WCC
     decomposition', /root/reference/src/scc_WCC.cu:829-840 /
-    scc_kernels.cu:496-536). Any partial refinement is correct: an SCC is
-    weakly connected, so min-labels never split an SCC across ranges.
-
-    Round-7 shape: edges are partitioned by the pull-join key (dst) so
-    the per-iteration SMJ fallback never reshuffles them; the pointer
-    jumps run FIRST, as broadcast self-lookups against the MATERIALIZED
-    previous labels (the old post-pull self-join re-evaluated the whole
-    un-materialized pull subtree twice per tick); label-side joins are
-    broadcast-hinted from the driver-known active count (the detached
-    frame's stats are reset by design)."""
+    scc_kernels.cu:496-536; one `label_step` per iteration). Any partial
+    refinement is correct: an SCC is weakly connected, so min-labels
+    never split an SCC across ranges."""
     und = re.select("src", "dst").unionByName(
         re.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    # broadcast regime: partition by the pull's AGG key (src) so the
-    # persisted frame's partitioning rides through the broadcast join and
-    # the per-iteration aggregation is exchange-free; past it, partition
-    # by the join key (dst) so iterations never reshuffle the edges
-    und_key = "src" if a_cnt <= BROADCAST_ROW_LIMIT else "dst"
-    und, _ = runner.tick("dec_edges", und.repartition(und_key), truncate=False, detach=False)
-
-    from pyspark.sql import Observation
-
+    und = runner.keyed_edges("dec_edges", und, "src", "dst", a_cnt)
     lab, _ = runner.tick("dec_lab", active.select("id", F.col("id").alias("label")))
     prev_sum = None  # labels are monotone non-increasing; sum fixpoint = converged
-    for i in range(iters):
-        cur = lab
-        for _j in range(2):
-            cur = cur.join(
-                _bc(lab.select(F.col("id").alias("label"), F.col("label").alias("ll")), a_cnt),
-                "label",
-                "left",
-            ).select(
-                "id",
-                F.least(F.col("label"), F.coalesce(F.col("ll"), F.col("label"))).alias("label"),
-            )
-        nbr = (
-            und.join(_bc(cur.select(F.col("id").alias("dst"), F.col("label").alias("nl")), a_cnt), "dst")
-            .groupBy("src")
-            .agg(F.min("nl").alias("nmin"))
-            .select(F.col("src").alias("id"), "nmin")
-        )
-        lab1 = cur.join(_bc(nbr, a_cnt), "id", "left").select(
-            "id", F.least(F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))).alias("label")
-        )
-        # convergence sum rides along as an observed metric of the tick's
-        # own materialization job — no separate agg action per iteration
-        obs = Observation(f"dec_{i}")
-        lab, _ = runner.tick("dec_lab", lab1.observe(obs, F.sum("label").alias("s")), count=False)
-        new_sum = obs.get["s"]
+    for _ in range(iters):
+        lab, new_sum = label_step(runner, "dec_lab", und, lab, a_cnt, "min")
         if new_sum == prev_sum:
             break
         prev_sum = new_sum

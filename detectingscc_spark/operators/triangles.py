@@ -49,20 +49,30 @@ def _oriented(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     return und, oriented
 
 
-def triangle_triples(spark: SparkSession, edges: DataFrame) -> DataFrame:
-    """All triangles as (x, y, z) vertex triples, each exactly once."""
-    _, o = _oriented(edges)
-    o = o.persist()
+def _closed_wedges(o: DataFrame) -> DataFrame:
+    """(u, v, w) triangles of the oriented frame `o`: one wedge self-join
+    plus the closing join, each triangle exactly once."""
     e1 = o.select(F.col("lo").alias("u"), F.col("hi").alias("v"))
     e2 = o.select(F.col("lo").alias("v"), F.col("hi").alias("w"))
     wedges = e1.join(e2, "v").select("u", "v", "w")
     closing = o.select(F.col("lo").alias("u"), F.col("hi").alias("w"))
-    tris = wedges.join(closing, ["u", "w"]).select("u", "v", "w")
-    return tris
+    return wedges.join(closing, ["u", "w"]).select("u", "v", "w")
+
+
+def triangle_triples(spark: SparkSession, edges: DataFrame) -> DataFrame:
+    """All triangles as (x, y, z) vertex triples, each exactly once."""
+    _, o = _oriented(edges)
+    return _closed_wedges(o.persist())
 
 
 def triangle_count(spark: SparkSession, edges: DataFrame) -> int:
-    return triangle_triples(spark, edges).count()
+    # the count is eager, so the persisted oriented frame is released here
+    _, o = _oriented(edges)
+    o = o.persist()
+    try:
+        return _closed_wedges(o).count()
+    finally:
+        o.unpersist()
 
 
 def triangle_count_per_vertex(spark: SparkSession, edges: DataFrame) -> DataFrame:
@@ -110,12 +120,7 @@ def clustering_coefficient(spark: SparkSession, edges: DataFrame) -> DataFrame:
     # tpv-inner-join universe was exactly deg's id set, and tpv's
     # coalesce-0 is reproduced on the left join below, so rows and
     # values are identical.
-    o = o.persist()
-    e1 = o.select(F.col("lo").alias("u"), F.col("hi").alias("v"))
-    e2 = o.select(F.col("lo").alias("v"), F.col("hi").alias("w"))
-    wedges = e1.join(e2, "v").select("u", "v", "w")
-    closing = o.select(F.col("lo").alias("u"), F.col("hi").alias("w"))
-    tris = wedges.join(closing, ["u", "w"]).select("u", "v", "w")
+    tris = _closed_wedges(o.persist())
     credits = (
         tris.select(F.col("u").alias("id"))
         .unionAll(tris.select(F.col("v").alias("id")))

@@ -99,7 +99,7 @@ def ktruss(
         raise ValueError(f"ktruss: k must be >= 2, got {k}")
     runner = runner or SuperstepRunner(spark, run_id=f"ktruss{k}")
     resid = undirected_edges(edges)
-    resid, n_edges = runner.tick("resid", resid.repartition("a"))
+    resid, n_edges = runner.tick("resid", resid)
     thresh = k - 2
     n_iters = rounds if rounds is not None else max_rounds
     for i in range(n_iters):

@@ -42,6 +42,24 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+# Row count up to which a driver-known-small frame (labels, ranks,
+# frontiers, pivots) is broadcast: (dir,id) rows ~16B each -> <=24MB. The
+# same bound serves the growing visited set of the SCC BFS anti-join:
+# broadcasting it up to 24MB measured ~10% faster end to end than a
+# shuffle anti-join at 4x scale. Every regime decision reads it from here
+# at call time.
+BROADCAST_ROW_LIMIT = 1_500_000
+
+
+def broadcastable(cnt: int | None) -> bool:
+    """True when a frame of `cnt` rows is in the broadcast regime."""
+    return cnt is not None and cnt <= BROADCAST_ROW_LIMIT
+
+
+def bc(df: DataFrame, cnt: int | None) -> DataFrame:
+    """Broadcast hint for driver-known-small frames (frontiers, pivots)."""
+    return F.broadcast(df) if broadcastable(cnt) else df
+
 
 class SuperstepRunner:
     """Manages persisted state + metrics + durable checkpoints for one
@@ -147,6 +165,25 @@ class SuperstepRunner:
             return self._detach(new), cnt
         # fresh expression ids only (no stats reset, no conversion cost)
         return new.select([F.col(c).alias(c) for c in new.columns]), cnt
+
+    def keyed_edges(
+        self, slot: str, df: DataFrame, agg_key: str, join_key: str, n_state: int
+    ) -> DataFrame:
+        """Persist a loop-invariant edge frame as slot `slot`, hash-keyed
+        for the supersteps that read it.
+
+        Each superstep joins the edges with a state frame of `n_state`
+        rows on `join_key` and aggregates the result by `agg_key`.
+        `persist` keeps the hash partitioning of the frame it caches and
+        `localCheckpoint` drops it, so the key chosen here survives every
+        iteration. In the broadcast regime the state side is broadcast and
+        the join carries the edge partitioning through, so edges keyed by
+        the aggregation key make the aggregation exchange-free. Past the
+        limit the join is a shuffle join, and edges keyed by the join key
+        are not reshuffled every iteration."""
+        key = agg_key if broadcastable(n_state) else join_key
+        out, _ = self.tick(slot, df.repartition(key), truncate=False, count=False, detach=False)
+        return out
 
     def _detach(self, df: DataFrame) -> DataFrame:
         """Wrap a materialized frame as a fresh JVM DataFrame.

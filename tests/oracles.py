@@ -214,3 +214,22 @@ def bfs_dist(edges: list[tuple[int, int]], sources: list[int]) -> dict[int, int]
                 dist[w] = dist[v] + 1
                 q.append(w)
     return dist
+
+
+def hits_numpy(
+    edges: list[tuple[int, int]], ids: list[int], iters: int = 10
+) -> dict[int, tuple[float, float]]:
+    """Dense HITS from the uniform hub start, L1-normalized each half-step;
+    duplicate edges keep multiplicity. Returns {vertex: (auth, hub)}."""
+    idx = {x: i for i, x in enumerate(ids)}
+    n = len(ids)
+    A = np.zeros((n, n))
+    for s, d in edges:
+        A[idx[s], idx[d]] += 1.0
+    h = np.full(n, 1.0 / n)
+    for _ in range(iters):
+        a = A.T @ h
+        a /= a.sum()
+        h = A @ a
+        h /= h.sum()
+    return {x: (float(a[idx[x]]), float(h[idx[x]])) for x in ids}

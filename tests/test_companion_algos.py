@@ -13,7 +13,7 @@ from detectingscc_spark.operators.triangles import triangle_count, triangle_coun
 from detectingscc_spark.sources.gtgraph import gtgraph_meta, read_gtgraph
 
 from .conftest import REF_DATA
-from .oracles import cc_unionfind, lpa_sync, pagerank_numpy, triangles_brute
+from .oracles import cc_unionfind, hits_numpy, lpa_sync, pagerank_numpy, triangles_brute
 
 
 @pytest.fixture(scope="module")
@@ -61,6 +61,28 @@ def test_triangles(spark, g128):
     for vid, cnt in per_exp.items():
         assert got[vid] == cnt
     assert sum(got.values()) == 3 * total_exp
+
+
+def test_triangle_count_releases_oriented_frame(spark):
+    """triangle_count returns an int, so nothing can read its persisted
+    oriented frame afterwards: no persistent RDD the call creates
+    outlives it. (Earlier tests' frames may be freed meanwhile, so the
+    check is on RDD ids, not on the bare count.)"""
+    import gc
+    import random
+
+    rng = random.Random(3)
+    erows = [(rng.randrange(40), rng.randrange(40)) for _ in range(200)]
+    edges = spark.createDataFrame(erows, "src long, dst long")
+    sc = spark.sparkContext
+
+    def persistent_ids():
+        gc.collect()
+        return set(sc._jsc.getPersistentRDDs().keys())
+
+    before = persistent_ids()
+    assert triangle_count(spark, edges) == triangles_brute(erows)[0]
+    assert persistent_ids() <= before
 
 
 def test_personalized_pagerank_allclose(spark, g128):
@@ -210,20 +232,10 @@ def test_hits_vs_numpy(spark):
     v = spark.createDataFrame([(i,) for i in ids], ["id"])
     got = {r["id"]: (r["auth"], r["hub"]) for r in hits(spark, g, v, iters=10).collect()}
 
-    idx = {x: i for i, x in enumerate(ids)}
-    n = len(ids)
-    A = np.zeros((n, n))
-    for s, d in es:
-        A[idx[s], idx[d]] += 1.0  # duplicate edges keep multiplicity
-    h = np.full(n, 1.0 / n)
-    for _ in range(10):
-        a = A.T @ h
-        a /= a.sum()
-        h = A @ a
-        h /= h.sum()
+    exp = hits_numpy(es, ids, iters=10)
     for x in ids:
-        assert abs(got[x][0] - a[idx[x]]) < 1e-9
-        assert abs(got[x][1] - h[idx[x]]) < 1e-9
+        assert abs(got[x][0] - exp[x][0]) < 1e-9
+        assert abs(got[x][1] - exp[x][1]) < 1e-9
 
 
 def _naive_support(und):

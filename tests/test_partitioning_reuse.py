@@ -1,11 +1,14 @@
 """Round-7 load-bearing mechanism guard.
 
-The iterative engines persist their loop-invariant edge frames keyed by
-the aggregation key (broadcast regime) so every superstep's aggregation
-plans as a partial+final HashAggregate pair with NO shuffle Exchange:
-this works because `persist()` preserves a frame's physical partitioning
-through `tick(truncate=False)` while `localCheckpoint()` does not.
-WCC/LPA/PageRank/coloring/scc-BFS all rely on it (OPTIMIZATION_r07.md).
+The iterative engines persist their loop-invariant edge frames through
+`SuperstepRunner.keyed_edges`, keyed by the aggregation key (broadcast
+regime) so every superstep's aggregation plans as a partial+final
+HashAggregate pair with NO shuffle Exchange: this works because
+`persist()` preserves a frame's physical partitioning through
+`tick(truncate=False)` while `localCheckpoint()` does not.
+WCC/LPA/PageRank/HITS/SALSA/eigencentrality and the FB engine's
+decomposition use `keyed_edges`; coloring and scc-BFS key their own
+byte-sized copies (OPTIMIZATION_r07.md).
 If a Spark upgrade ever stops propagating partitioning through
 persist + broadcast join + projection, these assertions flag it before
 the bench does.
@@ -82,3 +85,30 @@ def test_localcheckpoint_does_not_preserve_partitioning(spark):
     ck = e.repartition("src").localCheckpoint(eager=True)
     agg = ck.groupBy("src").agg(F.count(F.lit(1)).alias("n"))
     assert _n_shuffle_exchanges_outside_cache(agg) >= 1
+
+
+def test_keyed_edges_picks_the_key_by_regime(spark):
+    """Under the broadcast limit the edges are keyed by the aggregation
+    key (the per-superstep aggregation needs no exchange); past it they
+    are keyed by the join key."""
+    from detectingscc_spark.plans import superstep
+    from detectingscc_spark.plans.superstep import SuperstepRunner
+
+    e = spark.range(50_000).select(
+        (F.col("id") % 997).alias("src"), ((F.col("id") * 7) % 997).alias("dst")
+    )
+    lab = spark.range(997).select(F.col("id").alias("src"), F.col("id").alias("nl"))
+    runner = SuperstepRunner(spark)
+
+    ke = runner.keyed_edges("edges", e, "dst", "src", 997)
+    pull = ke.join(superstep.bc(lab, 997), "src").groupBy("dst").agg(F.sum("nl").alias("s"))
+    assert _n_shuffle_exchanges_outside_cache(pull) == 0
+    assert _n_shuffle_exchanges_outside_cache(ke.groupBy("src").count()) >= 1
+
+    past = superstep.BROADCAST_ROW_LIMIT + 1
+    ke = runner.keyed_edges("edges", e, "dst", "src", past)
+    assert _n_shuffle_exchanges_outside_cache(ke.groupBy("src").count()) == 0
+    assert _n_shuffle_exchanges_outside_cache(ke.groupBy("dst").count()) >= 1
+    # the result sanity of the keyed frame: same rows as its input
+    assert ke.count() == e.count()
+    runner.release_all()

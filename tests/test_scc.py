@@ -98,10 +98,10 @@ def test_scc_shuffle_regime(spark, monkeypatch, graph):
     """BROADCAST_ROW_LIMIT forced to 0: every BFS hop is a shuffle
     frontier join and every visited-set probe a shuffle anti-join (AQE
     skew splitting covers the hub). Output must stay exact."""
-    from detectingscc_spark.operators import scc as scc_mod
+    from detectingscc_spark.plans import superstep
     from .oracles import kosaraju_scc as _k
 
-    monkeypatch.setattr(scc_mod, "BROADCAST_ROW_LIMIT", 0)
+    monkeypatch.setattr(superstep, "BROADCAST_ROW_LIMIT", 0)
     edges, n = graph()
     df = spark.createDataFrame(edges, "src long, dst long")
     res = strongly_connected_components(spark, df)
