@@ -141,17 +141,11 @@ def q_degree_hist(spark, sf_dir):
     is the BIT LENGTH of the degree (length of its binary string):
     exact integer arithmetic on both engines, no floating log2 whose
     boundary values could round differently."""
-    from detectingscc_spark.operators.kcore import undirected_edges
+    from detectingscc_spark.graph import undirected_degrees, undirected_edges
 
-    und = undirected_edges(_edges(spark, sf_dir))
-    deg = (
-        und.select(F.col("a").alias("id"))
-        .unionAll(und.select(F.col("b").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
     return (
-        deg.groupBy(
+        undirected_degrees(undirected_edges(_edges(spark, sf_dir)))
+        .groupBy(
             F.length(F.conv(F.col("deg").cast("string"), 10, 2)).cast("long").alias("bucket")
         )
         .agg(
@@ -393,7 +387,7 @@ def q_modularity(spark, sf_dir):
     community-quality score a link-graph report pairs with LPA. Exact
     integer counts, one final double fold (rounded 6dp; community-sum
     reordering absorbed)."""
-    from detectingscc_spark.operators.kcore import undirected_edges
+    from detectingscc_spark.graph import undirected_degrees, undirected_edges
     from detectingscc_spark.operators.lpa import label_propagation
 
     e = _edges(spark, sf_dir)
@@ -407,16 +401,10 @@ def q_modularity(spark, sf_dir):
         .groupBy(F.col("lab_a").alias("c"))
         .agg(F.count(F.lit(1)).alias("inc"))
     )
-    deg = (
-        und.select(F.col("a").alias("id"))
-        .unionAll(und.select(F.col("b").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
     dc = (
-        deg.join(labels, "id")
+        undirected_degrees(und).join(labels, "id")
         .groupBy(F.col("label").alias("c"))
-        .agg(F.sum("d").alias("dc"))
+        .agg(F.sum("deg").alias("dc"))
     )
     m = und.agg(
         F.count(F.lit(1)).alias("m_edges"),

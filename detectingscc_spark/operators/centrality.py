@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..graph import canonical_edges
+from ..graph import canonical_edges, vertex_universe
 from ..plans.superstep import SuperstepRunner
 
 
@@ -108,12 +108,7 @@ def harmonic_centrality(
             F.round(F.sum(F.lit(1.0) / F.col("dist")), 6).alias("harmonic6"),
         )
     )
-    verts = (
-        edges.select(F.col("src").cast("long").alias("id"))
-        .union(edges.select(F.col("dst").cast("long").alias("id")))
-        .distinct()
-    )
-    return verts.join(agg, "id", "left").select(
+    return vertex_universe(edges).join(agg, "id", "left").select(
         "id",
         F.coalesce(F.col("n_reached"), F.lit(0)).alias("n_reached"),
         F.coalesce(F.col("harmonic6"), F.lit(0.0)).alias("harmonic6"),

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..graph import canonical_edges, vertex_universe
+from ..graph import canonical_edges, symmetric_edges, undirected_edges, vertex_universe
 from ..plans.superstep import SuperstepRunner, bc
 
 
@@ -68,16 +68,15 @@ def connected_components(
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     runner = runner or SuperstepRunner(spark, checkpoint_dir=checkpoint_dir, run_id="cc")
-    E = canonical_edges(edges)
-    und = E.unionByName(E.select(F.col("dst").alias("src"), F.col("src").alias("dst"))).distinct()
-
-    lab, n_verts = runner.tick("label", vertex_universe(E, vertices).select("id", F.col("id").alias("label")))
-    und = runner.keyed_edges("edges", und, "src", "dst", n_verts)
+    lab, n_verts = runner.tick(
+        "label", vertex_universe(canonical_edges(edges), vertices).select("id", F.col("id").alias("label"))
+    )
+    sym = runner.keyed_edges("edges", symmetric_edges(undirected_edges(edges)), "src", "dst", n_verts)
     prev_sum = None  # labels monotone non-increasing; sum fixpoint = converged
     for i in range(max_iters):
         runner.superstep = i + 1
         runner.bump("iterations")
-        lab, new_sum = label_step(runner, "label", und, lab, n_verts, "min")
+        lab, new_sum = label_step(runner, "label", sym, lab, n_verts, "min")
         runner.log("cc_iter", label_sum=int(new_sum))
         runner.maybe_checkpoint({"label": lab})
         if new_sum == prev_sum:
@@ -108,15 +107,11 @@ def bipartiteness(
     makes the all-integer DuckDB oracle exact.
     """
     from .centrality import landmark_distances
-    from .kcore import undirected_edges
 
     und = undirected_edges(edges)
-    sym = und.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionAll(
-        und.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    )
     cc = connected_components(spark, edges, runner=runner)
     roots = cc.select(F.col("cc_id").alias("id")).distinct()
-    dist = landmark_distances(spark, sym, roots, max_hops=max_hops)
+    dist = landmark_distances(spark, symmetric_edges(und), roots, max_hops=max_hops)
     parity = dist.select("id", (F.col("dist") % 2).alias("p"))
     odd = (
         und.join(parity.select(F.col("id").alias("a"), F.col("p").alias("pa")), "a")

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..graph import symmetric_edges, undirected_degrees, undirected_edges
 from ..plans.superstep import SuperstepRunner
 
 
@@ -132,13 +133,8 @@ def eigencentrality(
     unrolled-CTE DuckDB oracle mirrors it exactly (the HITS pattern —
     same carried-normalizer half-step shape: one hash join + one scalar
     agg per iteration over 2-column frames, one driver action each)."""
-    from .kcore import undirected_edges
-
     und = undirected_edges(edges)
-    sym = und.select(F.col("a").alias("u"), F.col("b").alias("w")).unionAll(
-        und.select(F.col("b").alias("u"), F.col("a").alias("w"))
-    )
-    v = und.select(F.col("a").alias("id")).union(und.select(F.col("b").alias("id"))).distinct()
+    v = undirected_degrees(und).select("id")
     n = v.count()
     if n == 0:
         # see hits(): the 1/n seed would constant-fold to 1/0 under ANSI
@@ -146,11 +142,11 @@ def eigencentrality(
     # every iteration reads the symmetrized table: persist it once
     runner = SuperstepRunner(spark, run_id="eigen")
     try:
-        sym = runner.keyed_edges("sym", sym, "w", "u", n)
+        sym = runner.keyed_edges("sym", symmetric_edges(und), "dst", "src", n)
         raw = v.select("id", (F.lit(1.0) / F.lit(float(n))).alias("raw"))
         total = None
         for _ in range(iters):
-            raw, total = _push(sym, raw, total, "u", "w")
+            raw, total = _push(sym, raw, total, "src", "dst")
     finally:
         runner.release_all()
     return _normalized(v, raw, total, "score")

@@ -1,7 +1,8 @@
 """k-core decomposition by iterative peeling (SURVEY.md §2.11 companion
 family; absent from the reference — standard link-graph analysis op).
 
-The k-core of the undirected view of the link graph is the maximal
+The k-core of the undirected view of the link graph (graph.py
+`undirected_edges`; degrees are `undirected_degrees`) is the maximal
 subgraph in which every vertex has degree >= k. Peeling: drop every
 vertex whose degree (distinct undirected neighbors) within the surviving
 subgraph is < k; repeat. Each round is a pure integer computation, so a
@@ -23,18 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..graph import undirected_degrees, undirected_edges
 from ..plans.superstep import SuperstepRunner
-
-
-def undirected_edges(edges: DataFrame) -> DataFrame:
-    """Canonical undirected edge set: (min(u,v), max(u,v)), dedup'd, no
-    self-loops."""
-    e = edges.select(F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst"))
-    return (
-        e.where(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .distinct()
-    )
 
 
 def kcore(
@@ -54,10 +45,8 @@ def kcore(
     fixed-depth form the DuckDB oracle unrolls.
     """
     runner = runner or SuperstepRunner(spark, run_id=f"kcore{k}")
-    und = undirected_edges(edges)
-    und, _ = runner.tick("und", und, detach=False)
-    alive = und.select(F.col("a").alias("id")).union(und.select(F.col("b").alias("id"))).distinct()
-    alive, n_alive = runner.tick("alive", alive)
+    und, _ = runner.tick("und", undirected_edges(edges), detach=False)
+    alive, n_alive = runner.tick("alive", undirected_degrees(und).select("id"))
 
     # resid = the surviving edge set, MATERIALIZED and re-filtered from
     # itself each round (alive shrinks monotonically, so residual-filtered-
@@ -68,13 +57,7 @@ def kcore(
     for i in range(n_iters):
         runner.superstep = i + 1
         runner.bump("iterations")
-        deg = (
-            resid.select(F.col("a").alias("id"))
-            .union(resid.select(F.col("b").alias("id")))
-            .groupBy("id")
-            .agg(F.count("*").alias("deg"))
-        )
-        survivors = deg.where(F.col("deg") >= k).select("id")
+        survivors = undirected_degrees(resid).where(F.col("deg") >= k).select("id")
         survivors, n_next = runner.tick("alive_next", survivors)
         runner.promote("alive_next", "alive")
         converged = n_next == n_alive

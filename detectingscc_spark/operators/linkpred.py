@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .kcore import undirected_edges
+from ..graph import symmetric_edges, undirected_degrees, undirected_edges
 
 
 def link_prediction(
@@ -40,10 +40,8 @@ def link_prediction(
 ) -> DataFrame:
     """Top-k predicted links: (a, b, common, jaccard6, adamic_adar6)."""
     und = undirected_edges(edges)
-    nbrs = und.select(F.col("a").alias("id"), F.col("b").alias("nbr")).unionAll(
-        und.select(F.col("b").alias("id"), F.col("a").alias("nbr"))
-    )
-    deg = nbrs.groupBy("id").agg(F.count(F.lit(1)).alias("deg"))
+    nbrs = symmetric_edges(und).select(F.col("src").alias("id"), F.col("dst").alias("nbr"))
+    deg = undirected_degrees(und)
     centers = nbrs.join(deg, "id")
     if max_center_degree is not None:
         centers = centers.where(F.col("deg") <= max_center_degree)

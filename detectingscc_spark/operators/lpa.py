@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..graph import canonical_edges, vertex_universe
+from ..graph import canonical_edges, symmetric_edges, undirected_edges, vertex_universe
 from ..plans.superstep import SuperstepRunner, bc
 
 
@@ -30,12 +30,11 @@ def label_propagation(
 ) -> DataFrame:
     """Return (id: long, label: long) after `rounds` synchronous rounds."""
     runner = runner or SuperstepRunner(spark, run_id="lpa")
-    E = canonical_edges(edges)
-    und = E.unionByName(E.select(F.col("dst").alias("src"), F.col("src").alias("dst"))).distinct()
-
-    lab, n_verts = runner.tick("label", vertex_universe(E, vertices).select("id", F.col("id").alias("label")))
+    lab, n_verts = runner.tick(
+        "label", vertex_universe(canonical_edges(edges), vertices).select("id", F.col("id").alias("label"))
+    )
     # the vote join is on src and both vote aggs group by dst
-    und = runner.keyed_edges("edges", und, "dst", "src", n_verts)
+    sym = runner.keyed_edges("edges", symmetric_edges(undirected_edges(edges)), "dst", "src", n_verts)
 
     for i in range(rounds):
         runner.superstep = i + 1
@@ -43,7 +42,7 @@ def label_propagation(
         # label side broadcast-hinted from the driver-known vertex count
         # (the detached frame's stats are reset by design)
         votes = (
-            und.join(bc(lab.select(F.col("id").alias("src"), F.col("label").alias("nl")), n_verts), "src")
+            sym.join(bc(lab.select(F.col("id").alias("src"), F.col("label").alias("nl")), n_verts), "src")
             .groupBy("dst", "nl")
             .agg(F.count("*").alias("c"))
             .groupBy("dst")

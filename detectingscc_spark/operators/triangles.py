@@ -1,12 +1,14 @@
 """Triangle counting — north_rule companion algorithm (SURVEY.md §2.11).
 
-Degree-ordered wedge join: canonicalize to undirected simple edges,
-orient each edge from the lower-(degree, id) endpoint to the higher one
+Degree-ordered wedge join over the undirected view (graph.py): `oriented`
+points each edge from the lower-(degree, id) endpoint to the higher one
 (standard skew mitigation — every triangle is counted exactly once and
 hub vertices never fan out as wedge centers beyond their forward degree),
-then one self-join to form wedges plus one semi-ish join to close them.
+then `closed_wedges` runs one self-join to form wedges plus one join to
+close them. This is the one triangle-listing kernel: the truss support
+(operators/truss.py) runs on it too.
 
-Per-vertex counts credit all three corners.
+Per-vertex counts credit all three corners (`corner_credits`).
 """
 
 from __future__ import annotations
@@ -14,28 +16,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..graph import undirected_degrees, undirected_edges, vertex_universe
 
-def _oriented(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Return (undirected canonical edges (a<b), degree-oriented edges)."""
-    und = (
-        edges.select(
-            F.least(F.col("src"), F.col("dst")).cast("long").alias("a"),
-            F.greatest(F.col("src"), F.col("dst")).cast("long").alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("a").alias("id"))
-        .unionAll(und.select(F.col("b").alias("id")))
-        .groupBy("id")
-        .agg(F.count("*").alias("deg"))
-    )
-    da = deg.select(F.col("id").alias("a"), F.col("deg").alias("da"))
-    db = deg.select(F.col("id").alias("b"), F.col("deg").alias("db"))
-    oriented = (
-        und.join(da, "a")
-        .join(db, "b")
+
+def oriented(und: DataFrame, deg: DataFrame) -> DataFrame:
+    """(lo, hi): each edge of the undirected view `und` pointed from its
+    lower-(degree, id) endpoint to the higher one; `deg` is
+    `undirected_degrees(und)`."""
+    return (
+        und.join(deg.select(F.col("id").alias("a"), F.col("deg").alias("da")), "a")
+        .join(deg.select(F.col("id").alias("b"), F.col("deg").alias("db")), "b")
         .select(
             F.when(
                 (F.col("da") < F.col("db")) | ((F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))),
@@ -46,10 +36,9 @@ def _oriented(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
         )
         .select(F.col("e.lo").alias("lo"), F.col("e.hi").alias("hi"))
     )
-    return und, oriented
 
 
-def _closed_wedges(o: DataFrame) -> DataFrame:
+def closed_wedges(o: DataFrame) -> DataFrame:
     """(u, v, w) triangles of the oriented frame `o`: one wedge self-join
     plus the closing join, each triangle exactly once."""
     e1 = o.select(F.col("lo").alias("u"), F.col("hi").alias("v"))
@@ -59,18 +48,30 @@ def _closed_wedges(o: DataFrame) -> DataFrame:
     return wedges.join(closing, ["u", "w"]).select("u", "v", "w")
 
 
+def corner_credits(tris: DataFrame) -> DataFrame:
+    """(id, triangles): how many of the (u, v, w) triangles each corner
+    vertex lies in; vertices in none are absent."""
+    return (
+        tris.select(F.col("u").alias("id"))
+        .unionAll(tris.select(F.col("v").alias("id")))
+        .unionAll(tris.select(F.col("w").alias("id")))
+        .groupBy("id")
+        .agg(F.count("*").alias("triangles"))
+    )
+
+
 def triangle_triples(spark: SparkSession, edges: DataFrame) -> DataFrame:
     """All triangles as (x, y, z) vertex triples, each exactly once."""
-    _, o = _oriented(edges)
-    return _closed_wedges(o.persist())
+    und = undirected_edges(edges)
+    return closed_wedges(oriented(und, undirected_degrees(und)).persist())
 
 
 def triangle_count(spark: SparkSession, edges: DataFrame) -> int:
     # the count is eager, so the persisted oriented frame is released here
-    _, o = _oriented(edges)
-    o = o.persist()
+    und = undirected_edges(edges)
+    o = oriented(und, undirected_degrees(und)).persist()
     try:
-        return _closed_wedges(o).count()
+        return closed_wedges(o).count()
     finally:
         o.unpersist()
 
@@ -78,20 +79,8 @@ def triangle_count(spark: SparkSession, edges: DataFrame) -> int:
 def triangle_count_per_vertex(spark: SparkSession, edges: DataFrame) -> DataFrame:
     """(id: long, triangles: long) — vertices in no triangle get 0 only if
     they appear in the edge set (join back against vertex universe)."""
-    tris = triangle_triples(spark, edges)
-    credits = (
-        tris.select(F.col("u").alias("id"))
-        .unionAll(tris.select(F.col("v").alias("id")))
-        .unionAll(tris.select(F.col("w").alias("id")))
-        .groupBy("id")
-        .agg(F.count("*").alias("triangles"))
-    )
-    verts = (
-        edges.select(F.col("src").cast("long").alias("id"))
-        .union(edges.select(F.col("dst").cast("long").alias("id")))
-        .distinct()
-    )
-    return verts.join(credits, "id", "left").select(
+    credits = corner_credits(triangle_triples(spark, edges))
+    return vertex_universe(edges).join(credits, "id", "left").select(
         "id", F.coalesce(F.col("triangles"), F.lit(0)).alias("triangles")
     )
 
@@ -105,29 +94,12 @@ def clustering_coefficient(spark: SparkSession, edges: DataFrame) -> DataFrame:
     Reuses the degree-oriented triangle machinery, so the expensive part
     (the wedge join) keeps its skew mitigation; the coefficient itself is
     one join + codegen arithmetic on exact integers (rounded to 6
-    decimals for engine-portable comparison).
+    decimals for engine-portable comparison). The degrees that orient
+    the edges are the ones the coefficient divides by.
     """
-    und, o = _oriented(edges)
-    deg = (
-        und.select(F.col("a").alias("id"))
-        .unionAll(und.select(F.col("b").alias("id")))
-        .groupBy("id")
-        .agg(F.count("*").alias("deg"))
-    )
-    # triangle credits built directly on THIS derivation's oriented frame
-    # instead of calling triangle_count_per_vertex (which re-derived und,
-    # the degrees and a separate vertex universe from scratch). The old
-    # tpv-inner-join universe was exactly deg's id set, and tpv's
-    # coalesce-0 is reproduced on the left join below, so rows and
-    # values are identical.
-    tris = _closed_wedges(o.persist())
-    credits = (
-        tris.select(F.col("u").alias("id"))
-        .unionAll(tris.select(F.col("v").alias("id")))
-        .unionAll(tris.select(F.col("w").alias("id")))
-        .groupBy("id")
-        .agg(F.count("*").alias("triangles"))
-    )
+    und = undirected_edges(edges)
+    deg = undirected_degrees(und)
+    credits = corner_credits(closed_wedges(oriented(und, deg).persist()))
     return (
         deg.join(credits, "id", "left")
         .select("id", "deg", F.coalesce(F.col("triangles"), F.lit(0)).alias("triangles"))
@@ -170,13 +142,8 @@ def degree_assortativity(spark: SparkSession, edges: DataFrame) -> DataFrame:
     four terms — and therefore the final double division — are
     bit-identical to the explicit-union form.
     """
-    und, _ = _oriented(edges)
-    deg = (
-        und.select(F.col("a").alias("id"))
-        .unionAll(und.select(F.col("b").alias("id")))
-        .groupBy("id")
-        .agg(F.count("*").alias("deg"))
-    )
+    und = undirected_edges(edges)
+    deg = undirected_degrees(und)
     da = deg.select(F.col("id").alias("a"), F.col("deg").alias("dx"))
     db = deg.select(F.col("id").alias("b"), F.col("deg").alias("dy"))
     pairs = und.join(da, "a").join(db, "b")

@@ -10,10 +10,9 @@ exact integer arithmetic, so a fixed-round run unrolls into SQL CTEs
 (KTRUSS_SQL in __spark_entry__ mirrors it round by round) and the
 fixpoint result is unique regardless of enumeration order.
 
-Scale notes: per-round support recomputation reuses the degree-oriented
-triangle wedge join (operators/triangles.py) on a MATERIALIZED
-monotone-shrinking residual edge set — hub vertices never fan out as
-wedge centers beyond their forward degree, and each round re-orients the
+Scale notes: per-round support recomputation runs the triangle kernel
+(`oriented` + `closed_wedges`, operators/triangles.py) on a MATERIALIZED
+monotone-shrinking residual edge set — each round re-orients the
 (smaller) residual rather than re-scanning the full edge table. One
 support-agg job + one residual checkpoint per round through the
 SuperstepRunner (lineage truncated, counts ride as tick observations).
@@ -24,8 +23,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..graph import undirected_degrees, undirected_edges
 from ..plans.superstep import SuperstepRunner
-from .kcore import undirected_edges
+from .triangles import closed_wedges, oriented
 
 
 def _support(und: DataFrame) -> DataFrame:
@@ -35,31 +35,7 @@ def _support(und: DataFrame) -> DataFrame:
     orientation is built directly on it (no re-canonicalizing
     distinct), so each peel round costs one degree agg + the wedge
     join, both on the shrinking residual."""
-    deg = (
-        und.select(F.col("a").alias("id"))
-        .unionAll(und.select(F.col("b").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    o = (
-        und.join(deg.select(F.col("id").alias("a"), F.col("deg").alias("da")), "a")
-        .join(deg.select(F.col("id").alias("b"), F.col("deg").alias("db")), "b")
-        .select(
-            F.when(
-                (F.col("da") < F.col("db"))
-                | ((F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))),
-                F.struct(F.col("a").alias("lo"), F.col("b").alias("hi")),
-            )
-            .otherwise(F.struct(F.col("b").alias("lo"), F.col("a").alias("hi")))
-            .alias("e")
-        )
-        .select(F.col("e.lo").alias("lo"), F.col("e.hi").alias("hi"))
-    )
-    e1 = o.select(F.col("lo").alias("u"), F.col("hi").alias("v"))
-    e2 = o.select(F.col("lo").alias("v"), F.col("hi").alias("w"))
-    wedges = e1.join(e2, "v").select("u", "v", "w")
-    closing = o.select(F.col("lo").alias("u"), F.col("hi").alias("w"))
-    tris = wedges.join(closing, ["u", "w"]).select("u", "v", "w")
+    tris = closed_wedges(oriented(und, undirected_degrees(und)))
     # each triangle credits its three edges, re-canonicalized to (a < b)
     credits = (
         tris.select(F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b"))

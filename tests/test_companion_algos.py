@@ -476,7 +476,7 @@ def test_modularity_two_cliques(spark, tmp_path):
     Newman modularity matches the hand formula Q = sum in_c/m - (d_c/2m)^2."""
     import itertools
 
-    from detectingscc_spark.operators.kcore import undirected_edges
+    from detectingscc_spark.graph import undirected_edges
     from detectingscc_spark.operators.lpa import label_propagation
 
     c1, c2 = [1, 2, 3, 4], [11, 12, 13, 14]

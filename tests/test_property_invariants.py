@@ -189,6 +189,35 @@ def test_ktruss_vs_naive_random(spark, es):
 
 @given(_GRAPH)
 @_SETTINGS
+def test_wedge_family_vs_naive_random(spark, es):
+    """Triangle totals and per-vertex counts, edge support and k-cores —
+    every operator on the shared undirected view and wedge kernel —
+    equal the python oracles on random digraphs. The frame is built with
+    int ids, so the view's own cast to long is what the oracles see."""
+    from detectingscc_spark.operators.kcore import kcore
+    from detectingscc_spark.operators.triangles import triangle_count, triangle_count_per_vertex
+    from detectingscc_spark.operators.truss import edge_support
+
+    from .oracles import kcore_peel, triangles_brute
+    from .test_companion_algos import _naive_support
+
+    g = spark.createDataFrame(es, "src int, dst int")
+    total, per = triangles_brute(es)
+    assert triangle_count(spark, g) == total, es
+    tpv_df = triangle_count_per_vertex(spark, g)
+    assert tpv_df.schema["id"].dataType.typeName() == "long"
+    tpv = {r["id"]: r["triangles"] for r in tpv_df.collect()}
+    assert tpv == {x: per.get(x, 0) for e in es for x in e}, es
+    und = {(min(a, b), max(a, b)) for a, b in es if a != b}
+    sup = {(r["a"], r["b"]): r["support"] for r in edge_support(spark, g).collect()}
+    assert sup == _naive_support(und), es
+    for k in (2, 3):
+        got = {r["id"] for r in kcore(spark, g, k=k).collect()}
+        assert got == kcore_peel(es, k), f"k={k} es={es}"
+
+
+@given(_GRAPH)
+@_SETTINGS
 def test_harmonic_vs_naive_random(spark, es):
     """Landmark harmonic centrality equals the python BFS oracle on
     random digraphs; landmarks = odd ids (a nontrivial subset)."""

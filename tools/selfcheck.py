@@ -59,14 +59,20 @@ def main():
     import __spark_entry__ as entry
     from detectingscc_spark.session import get_spark
 
+    qs = entry.queries()
+    oracles = entry.oracle_sql()
+    only = {x for x in args.only.split(",") if x}
+    # a misspelt name would filter every query out and pass vacuously
+    unknown = sorted(only - qs.keys())
+    if unknown:
+        print("UNKNOWN queries:", unknown)
+        sys.exit(2)
+
     spark = get_spark(app_name="selfcheck", shuffle_partitions=16)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{args.sf}/{t}.parquet'")
 
-    qs = entry.queries()
-    oracles = entry.oracle_sql()
-    only = {x for x in args.only.split(",") if x}
     failures = []
     for name, fn in qs.items():
         if only and name not in only:
