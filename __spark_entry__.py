@@ -67,7 +67,7 @@ def q_scc_partitioned(spark, sf_dir):
     (same output contract as q_scc -> same SQL oracle)."""
     from detectingscc_spark.operators.partitioned import scc_partitioned
 
-    return scc_partitioned(spark, _edges(spark, sf_dir), n_parts=8, local_finish_edges=20_000)
+    return scc_partitioned(spark, _edges(spark, sf_dir), local_finish_edges=20_000)
 
 
 def q_scc_coloring(spark, sf_dir):

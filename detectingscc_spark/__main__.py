@@ -44,7 +44,6 @@ def main():
     ap.add_argument("--no-trim2", action="store_true", help="reference -q off")
     ap.add_argument("--trim-iters", type=int, default=4, help="reference -p depth")
     ap.add_argument("--local-finish-edges", type=int, default=0)
-    ap.add_argument("--n-parts", type=int, default=32)
     ap.add_argument("--index-path", default=None,
                     help="persisted ANN index dir (required for "
                     "--algo ann-build / ann-probe)")
@@ -156,7 +155,7 @@ def main():
         "|".join(
             str(x)
             for x in (args.input, args.algo, args.no_trim2, args.trim_iters,
-                      args.local_finish_edges, args.n_parts,
+                      args.local_finish_edges,
                       # result-shaping knobs of the companion algos: a
                       # rerun on the same --checkpoint-dir with a
                       # different k / iteration count / source set must
@@ -169,14 +168,14 @@ def main():
         state_format=args.state_format,
     )
     t0 = time.time()
+    scc_flags = dict(
+        runner=runner, trim2_enabled=not args.no_trim2, trim_iters=args.trim_iters,
+        local_finish_edges=args.local_finish_edges,
+    )
     if args.algo == "scc":
         from .operators.scc import strongly_connected_components
 
-        result = strongly_connected_components(
-            spark, edges, vertices, runner=runner,
-            trim2_enabled=not args.no_trim2, trim_iters=args.trim_iters,
-            local_finish_edges=args.local_finish_edges,
-        )
+        result = strongly_connected_components(spark, edges, vertices, **scc_flags)
         n_groups = result.select("scc_id").distinct().count()
     elif args.algo == "scc-coloring":
         from .operators.coloring import scc_coloring
@@ -186,7 +185,7 @@ def main():
     elif args.algo == "scc-partitioned":
         from .operators.partitioned import scc_partitioned
 
-        result = scc_partitioned(spark, edges, vertices, n_parts=args.n_parts)
+        result = scc_partitioned(spark, edges, vertices, **scc_flags)
         n_groups = result.select("scc_id").distinct().count()
     elif args.algo == "cc":
         from .operators.components import connected_components

@@ -120,7 +120,7 @@ def scc_coloring(
         )
         if s_cnt < a_cnt:
             emit_done(
-                active.join(survivors.select("id"), "id", "left_anti")
+                active.join(bc(survivors, s_cnt).select("id"), "id", "left_anti")
                 .select("id", F.col("id").alias("scc_id"))
             )
         runner.promote("active_next", "active")
@@ -206,12 +206,13 @@ def scc_coloring(
                 ce.join(bc(front.withColumnRenamed("id", "src"), f_cnt), "src")
                 .select(F.col("dst").alias("id"))
                 .distinct()
-                .join(vis_view, "id", "left_anti")
+                .join(bc(vis_view, v_cnt), "id", "left_anti")
             )
             front, f_cnt = runner.tick(f"vis_{hops}", new, detach=False)
             if f_cnt:
                 frag_slots.append(f"vis_{hops}")
                 vis_view = vis_view.unionByName(front)
+                v_cnt += f_cnt
                 if len(frag_slots) >= COMPACT_EVERY:
                     vis_view, _ = runner.tick(
                         "vis_base", vis_view, count=False, detach=False
@@ -228,7 +229,7 @@ def scc_coloring(
         retired = vis_view.join(bc(col_df, a_cnt), "id")
         reps = retired.groupBy("label").agg(F.min("id").alias("scc_id"))
         emit_done(retired.join(bc(reps, a_cnt), "label").select("id", "scc_id"))
-        active, a_cnt = runner.tick("active", active.join(vis_view, "id", "left_anti"))
+        active, a_cnt = runner.tick("active", active.join(bc(vis_view, v_cnt), "id", "left_anti"))
         runner.log("coloring_round", round=rnd, active=a_cnt, prop_iters=prev_iters, bfs_hops=hops)
         for s in ("color", "ce", "vis_base", "prop_re", *frag_slots):
             runner.release(s)

@@ -1,4 +1,4 @@
-"""Partitioned SCC: partition-local compute + condensation merge — the
+"""Partitioned SCC: partition-local Tarjan plus a global phase — the
 Spark-native re-architecture of the reference's `detectSCC`
 (/root/reference/src/scc_WCC.cu:1000-1577).
 
@@ -6,41 +6,56 @@ The reference runs METIS-partition-confined FB rounds, then materializes
 per-vertex reachability closures as host std::sets and intersects them
 pairwise up a partition-merge tree (/root/reference/src/scc_WCC.cu:
 1276-1329, 1345-1528) — quadratic memory and a 10,001-edge device cap.
-Here the merge is replaced by ONE contraction, which is exactly the
-"predicate relaxation" translation SURVEY.md §3.3 calls for:
 
-  1. local phase: Tarjan per partition-induced subgraph inside
-     applyInPandas (each partition's subgraph fits one executor by
-     construction — the same assumption detectSCC makes of a METIS part);
-     local label = min member id of the partition-local SCC.
+Default (no `partitions`): the partitions are the FB engine's own
+ranges. One FB round splits the graph into the pivot's SCC and its
+forward-only, backward-only and unreached ranges, and no SCC crosses a
+range — so every range is a partition that provably confines its SCCs,
+which a METIS edge cut can only approximate. From round 2 on, the engine
+(`strongly_connected_components` with `_finish_caps`) finishes every
+range within `max_local_edges` / `max_local_verts` in ONE executor-side
+Tarjan job keyed by range (`scc._finish_ranges`) and emits its labels as
+final; no contraction is needed. Ranges over a cap continue through
+decomposition, trims, pivots and BFS. On the 5k-file corpus graph
+(seed 42) round 1 leaves 5 vertices in 2 ranges, so the call is one FB
+round plus one finish.
+
+A range is finished by one Python task: `_tarjan_local` costs about
+10 µs and 125 bytes of Python heap per edge (617 MB at the default
+5M-edge cap). When the round-1 pivot misses a giant SCC, the whole SCC
+is one range; on a 4-core local[4] machine finishing it still beat FB
+rounds at every size measured, up to the cap (warm, per call: 80k
+edges 12.7 s vs 24.7 s; 1.3M: 56-68 s vs 98-103 s; 5M: 153 s vs over
+190 s). With many executors FB gains parallelism the finish does not,
+so there the crossover may sit below the caps; it is unmeasured.
+
+With `partitions=(id, part)` (the METIS analog, the reference's
+src/load.cpp:115-130) the labels are data and need not confine SCCs,
+so the merge is ONE contraction — the "predicate relaxation"
+translation SURVEY.md §3.3 calls for:
+
+  1. local phase: Tarjan per part-induced subgraph (`scc.tarjan_groups`
+     keyed by part); local label = min member id of the part-local SCC.
+     A part over either cap keeps identity labels (a no-op contraction)
+     and the global phase absorbs it, so a pathological labelling
+     degrades to global-engine throughput instead of OOMing an executor.
   2. contraction: every edge (u,v) -> (L(u), L(v)); local SCCs are always
      subsets of global SCCs, so contracting them preserves the SCC
      structure (the condensation-of-subgraph lemma).
-  3. global phase: the distributed FB-Trim engine on the (much smaller)
-     contracted graph; final scc_id(v) = scc_id(L(v)), which stays the
-     min member id because local labels are themselves min member ids.
-
-Degradation: the local phase assumes a partition-induced subgraph fits
-one Arrow cogroup batch — the same assumption detectSCC makes of a METIS
-part. Unlike the reference (which would abort), a part whose edge or
-vertex count exceeds `max_local_edges` / `max_local_verts` is NOT sent
-to the Tarjan kernel: its vertices keep identity labels (lbl = id, a
-no-op contraction) and the distributed global phase absorbs the whole
-part. Pathological partitionings therefore degrade to global-engine
-throughput instead of OOMing an executor; correctness is unaffected
-because contracting nothing is always valid.
+  3. global phase: the distributed FB-Trim engine on the contracted
+     graph; final scc_id(v) = scc_id(L(v)), which stays the min member id
+     because local labels are themselves min member ids.
 
 Equivalence with the global engine is tested (tests/test_partitioned.py).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..graph import canonical_edges, vertex_universe
-from .scc import _tarjan_local, strongly_connected_components
+from .scc import small_groups, strongly_connected_components, tarjan_groups
 
 
 def scc_partitioned(
@@ -48,87 +63,49 @@ def scc_partitioned(
     edges: DataFrame,
     vertices: DataFrame | None = None,
     *,
-    n_parts: int = 32,
     partitions: DataFrame | None = None,
     max_local_edges: int = 5_000_000,
     max_local_verts: int = 5_000_000,
+    n_parts: int | None = None,
     **scc_kwargs,
 ) -> DataFrame:
     """(id, scc_id) with scc_id = min member id; identical to
     strongly_connected_components, computed partition-first.
 
-    `partitions`: optional (id, part) label table (the METIS analog,
-    /root/reference/src/load.cpp:115-130); default hash partitioning
-    id % n_parts. Parts larger than max_local_edges / max_local_verts
-    bypass the Arrow-batch local phase (identity labels) and are handled
-    entirely by the distributed global phase — see module docstring.
+    Default: FB round 1, then every range within max_local_edges /
+    max_local_verts is finished by one executor-side Tarjan job.
+    `partitions`: optional (id, part) label table for the METIS-style
+    local phase + contraction; a vertex it does not label takes its own
+    id as part (any labelling is valid, see the module docstring).
+
+    `n_parts` is accepted and ignored: it sized the retired hash
+    partitioning, and the benchmark harness (perfbench/workloads.py)
+    still passes it.
     """
+    if partitions is None:
+        return strongly_connected_components(
+            spark, edges, vertices, _finish_caps=(max_local_edges, max_local_verts), **scc_kwargs
+        )
+
     E = canonical_edges(edges)
-    verts = vertex_universe(E, vertices)
-
-    if partitions is not None:
-        vp = verts.join(
-            partitions.select(F.col("id").cast("long"), F.col("part").cast("long")), "id", "left"
-        ).select("id", F.coalesce("part", F.col("id") % n_parts).alias("part"))
-        # ---- phase 1: partition-local SCC (Tarjan per subgraph, Arrow) ----
-        local_edges = (
-            E.join(vp.select(F.col("id").alias("src"), F.col("part").alias("sp")), "src")
-            .join(vp.select(F.col("id").alias("dst"), F.col("part").alias("dp")), "dst")
-            .where(F.col("sp") == F.col("dp"))
-            .select(F.col("sp").alias("part"), "src", "dst")
-        )
-    else:
-        # default hash partitioning is a PURE FUNCTION of the id — derive
-        # the part labels as expressions instead of two label-table joins
-        # (same rows, two exchanges fewer; the METIS-label path above
-        # keeps the join form because its labels are data)
-        vp = verts.select("id", (F.col("id") % n_parts).cast("long").alias("part"))
-        local_edges = E.where(
-            (F.col("src") % n_parts) == (F.col("dst") % n_parts)
-        ).select((F.col("src") % n_parts).cast("long").alias("part"), "src", "dst")
-
-    # graceful degradation: a part too big for one Arrow batch is exempted
-    # from the local phase (identity labels) and left to the global engine.
-    # ONE job decides: edge rows and vertex rows union (tagged) into a
-    # single ≤ n_parts-row agg — every part appears in vp, so no outer
-    # join is needed. Empty on healthy inputs.
-    sizes = (
-        local_edges.select("part", F.lit(1).alias("e"))
-        .unionByName(vp.select("part", F.lit(0).alias("e")))
-        .groupBy("part")
-        .agg(F.sum("e").alias("ne"), F.sum(1 - F.col("e")).alias("nv"))
+    vp = vertex_universe(E, vertices).join(
+        partitions.select(F.col("id").cast("long"), F.col("part").cast("long")), "id", "left"
+    ).select("id", F.coalesce("part", "id").alias("part"))
+    # ---- phase 1: partition-local SCC (Tarjan per part, executor-side) ----
+    local_edges = (
+        E.join(vp.select(F.col("id").alias("src"), F.col("part").alias("sp")), "src")
+        .join(vp.select(F.col("id").alias("dst"), F.col("part").alias("dp")), "dst")
+        .where(F.col("sp") == F.col("dp"))
+        .select(F.col("sp").alias("part"), "src", "dst")
     )
-    oversized = [
-        int(r["part"])
-        for r in sizes.where(
-            (F.col("ne") > max_local_edges) | (F.col("nv") > max_local_verts)
-        )
-        .select("part")
-        .collect()
-    ]
-
-    def local_scc(key, epdf: pd.DataFrame, vpdf: pd.DataFrame) -> pd.DataFrame:
-        ids = vpdf["id"].tolist()
-        rows = list(zip(epdf["src"].tolist(), epdf["dst"].tolist())) if len(epdf) else []
-        labels = _tarjan_local(rows, ids)
-        return pd.DataFrame({"id": ids, "lbl": [labels[v] for v in ids]})
-
-    vp_small, le_small = vp, local_edges
-    if oversized:
-        vp_small = vp.where(~F.col("part").isin(oversized))
-        le_small = local_edges.where(~F.col("part").isin(oversized))
+    small = small_groups(local_edges, vp, "part", max_local_edges, max_local_verts)
+    # a part over either cap keeps identity labels: contraction maps its
+    # edges to themselves, so the global phase sees its full subgraph
     local = (
-        le_small.groupBy("part")
-        .cogroup(vp_small.groupBy("part"))
-        .applyInPandas(local_scc, "id long, lbl long")
+        tarjan_groups(local_edges, vp, small, "part").select("id", F.col("scc_id").alias("lbl"))
+        .unionByName(vp.join(small, "part", "left_anti").select("id", F.col("id").alias("lbl")))
+        .persist()
     )
-    if oversized:
-        # identity labels: contraction maps the part's edges to themselves,
-        # so the global phase sees the part's full subgraph unchanged
-        local = local.unionByName(
-            vp.where(F.col("part").isin(oversized)).select("id", F.col("id").alias("lbl"))
-        )
-    local = local.persist()
     local.count()
 
     # ---- phase 2: contract local SCCs, run the global engine ----------
@@ -149,8 +126,4 @@ def scc_partitioned(
     global_scc = strongly_connected_components(spark, condensed, cond_verts, **scc_kwargs)
 
     # ---- map back -----------------------------------------------------
-    out = (
-        local.join(global_scc.withColumnRenamed("id", "lbl"), "lbl")
-        .select("id", "scc_id")
-    )
-    return out
+    return local.join(global_scc.withColumnRenamed("id", "lbl"), "lbl").select("id", "scc_id")

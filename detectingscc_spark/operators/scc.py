@@ -29,7 +29,9 @@ driver finishes with an in-memory Tarjan pass — the distributed rounds
 have already removed the giant SCC and trims, and a sub-threshold tail is
 latency- not throughput-bound (intent of detectSCC's merge phase,
 /root/reference/src/scc_WCC.cu:1345-1528, without its quadratic closure
-sets).
+sets). `scc_partitioned` instead finishes, from round 2 on, every range
+within its caps in one executor-side Tarjan job (`_finish_ranges`): FB
+ranges are SCC-closed, so range-local SCCs are final.
 
 Superstep fixed-cost discipline (the scaling-efficiency levers):
   * ONE driver action per tick — row counts ride as observed metrics of
@@ -51,6 +53,7 @@ commits a durable parquet checkpoint + manifest for resume (north_rule).
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -60,7 +63,8 @@ from .components import label_step
 
 
 def _tarjan_local(edge_rows, vertex_ids):
-    """Iterative Tarjan on the (small) residual graph, driver-side.
+    """Iterative Tarjan on a small graph held in memory (the driver's
+    residual tail or one group of `tarjan_groups`).
     Returns {vertex: scc_min_id}."""
     adj: dict = {v: [] for v in vertex_ids}
     for s, d in edge_rows:
@@ -116,6 +120,40 @@ def _tarjan_local(edge_rows, vertex_ids):
     return result
 
 
+def _tarjan_group(key, epdf: pd.DataFrame, vpdf: pd.DataFrame) -> pd.DataFrame:
+    ids = vpdf["id"].tolist()
+    labels = _tarjan_local(zip(epdf["src"].tolist(), epdf["dst"].tolist()), ids)
+    return pd.DataFrame({"id": ids, "scc_id": [labels[v] for v in ids]})
+
+
+def small_groups(edges: DataFrame, verts: DataFrame, key: str, max_edges: int, max_verts: int) -> DataFrame:
+    """(key, ne, nv) of the `key` groups with at most `max_edges` edges
+    and `max_verts` vertices: ONE aggregate over the tagged union of
+    edges(key, ...) and verts(key, ...), so a group without edges still
+    appears."""
+    return (
+        edges.select(key, F.lit(1).alias("e"))
+        .unionByName(verts.select(key, F.lit(0).alias("e")))
+        .groupBy(key)
+        .agg(F.sum("e").alias("ne"), F.sum(1 - F.col("e")).alias("nv"))
+        .where((F.col("ne") <= max_edges) & (F.col("nv") <= max_verts))
+    )
+
+
+def tarjan_groups(edges: DataFrame, verts: DataFrame, small: DataFrame, key: str) -> DataFrame:
+    """(id, scc_id) for the vertices of the groups listed in `small`:
+    edges(key, src, dst) and verts(key, id) are cogrouped by `key` and
+    each group runs `_tarjan_local` executor-side. The labels are the
+    SCCs of each group's induced subgraph: final when the groups are
+    SCC-closed (FB ranges), group-local otherwise (METIS parts)."""
+    keys = small.select(key)
+    return (
+        edges.join(keys, key, "left_semi").groupBy(key)
+        .cogroup(verts.join(keys, key, "left_semi").groupBy(key))
+        .applyInPandas(_tarjan_group, "id long, scc_id long")
+    )
+
+
 def strongly_connected_components(
     spark: SparkSession,
     edges: DataFrame,
@@ -130,6 +168,7 @@ def strongly_connected_components(
     decompose_iters: int = 12,
     trim2_enabled: bool = True,
     trim_iters: int = 4,
+    _finish_caps: tuple[int, int] | None = None,
 ) -> DataFrame:
     """Compute SCCs of a directed graph given as edges(src, dst).
 
@@ -139,6 +178,10 @@ def strongly_connected_components(
 
     Set `local_finish_edges > 0` to let the driver finish a sub-threshold
     residual with in-memory Tarjan; tests exercise both paths.
+
+    `_finish_caps=(max_edges, max_verts)` (scc_partitioned's range
+    finish) retires, from round 2 on, every range within both caps in one
+    executor-side Tarjan job (`_finish_ranges`).
     """
     runner = runner or SuperstepRunner(spark, checkpoint_dir=checkpoint_dir)
 
@@ -207,6 +250,12 @@ def strongly_connected_components(
             re_cnt = re.count()
         else:
             re, re_cnt = refresh_residual(re, active, a_cnt)
+            if _finish_caps:
+                active, a_cnt, re, re_cnt = _finish_ranges(
+                    runner, re, re_cnt, active, a_cnt, _finish_caps, emit_done
+                )
+                if a_cnt == 0:
+                    break
 
         # ---- optional range decomposition (weak components of residual)
         # (after refresh: must only see same-CURRENT-range edges, else it
@@ -243,7 +292,8 @@ def strongly_connected_components(
                     [(int(v), int(s)) for v, s in labels.items()], "id long, scc_id long"
                 )
             )
-            a_cnt = 0
+            # the final checkpoint must not record the retired set as active
+            active, a_cnt, re = _emptied(active), 0, _emptied(re)
             runner.log("local_finish", vertices=len(ids), edges=len(rows))
             break
 
@@ -292,7 +342,7 @@ def strongly_connected_components(
             "sub", F.when(F.col("fw"), 1).when(F.col("bw"), 2).otherwise(0)
         )
         regroup = surv.groupBy("range", "sub").agg(F.min("id").alias("new_range"))
-        active = surv.join(bc(regroup, None), ["range", "sub"]).select(
+        active = surv.join(bc(regroup, a_cnt), ["range", "sub"]).select(
             "id", F.col("new_range").alias("range")
         )
         active, a_cnt = runner.tick("active", active)
@@ -308,12 +358,49 @@ def strongly_connected_components(
     return all_done().select(F.col("id").cast("long"), F.col("scc_id").cast("long"))
 
 
-def _assemble_state(runner, state, vis_f, vis_b):
-    """Rebuild (id, range, fw, bw) from the two visited id-sets."""
+def _emptied(df: DataFrame) -> DataFrame:
+    """`df`'s schema with no rows, for state whose every row has retired."""
+    return df.where(F.lit(False))
+
+
+def _finish_ranges(runner, re, re_cnt, active, a_cnt, caps, emit_done):
+    """Retire every range with at most caps = (max edges, max vertices)
+    in ONE executor-side Tarjan job (`tarjan_groups` keyed by range).
+
+    Called right after a round >= 2 refreshes the residual. Every range
+    is then SCC-closed: an FB split and a weak-component refinement never
+    cut an SCC, and the refreshed residual holds only same-range edges,
+    so a range's local SCCs are its global ones and no contraction is
+    needed. Larger ranges stay for decomposition, trims and BFS.
+    Returns (active, a_cnt, re, re_cnt) without the finished ranges."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    small = small_groups(re, active, "range", *caps)
+    small, s_cnt = runner.tick(
+        "small", small.observe(obs, F.sum("ne").alias("ne"), F.sum("nv").alias("nv"))
+    )
+    fin_e, fin_v = obs.get["ne"] or 0, obs.get["nv"] or 0
+    if fin_v:
+        keys = bc(small, s_cnt)
+        emit_done(tarjan_groups(re, active, keys, "range"))
+        runner.log("finish_ranges", ranges=s_cnt, vertices=fin_v, edges=fin_e)
+        if fin_v == a_cnt:
+            active, re = _emptied(active), _emptied(re)
+        else:
+            active, _ = runner.tick("active", active.join(keys, "range", "left_anti"), count=False)
+            re, _ = runner.tick("re", re.join(keys, "range", "left_anti"), count=False, detach=False)
+    runner.release("small")
+    return active, a_cnt - fin_v, re, re_cnt - fin_e
+
+
+def _assemble_state(runner, state, vis_f, vis_b, vis_cnt):
+    """Rebuild (id, range, fw, bw) from the two visited id-sets, which
+    hold at most `vis_cnt` rows each."""
     out = (
         state.select("id", "range")
-        .join(vis_f.withColumn("nf", F.lit(True)), "id", "left")
-        .join(vis_b.withColumn("nb", F.lit(True)), "id", "left")
+        .join(bc(vis_f.withColumn("nf", F.lit(True)), vis_cnt), "id", "left")
+        .join(bc(vis_b.withColumn("nb", F.lit(True)), vis_cnt), "id", "left")
         .select(
             "id",
             "range",
@@ -415,6 +502,7 @@ def _bfs_join(runner, re_f, re_cnt, state, max_bfs_hops, n_active):
         runner, state,
         vis.where("dir = 0").select("id"),
         vis.where("dir = 1").select("id"),
+        vis_cnt,
     )
     for slot in ["bfs_ed", "bfs_front", "bfs_vis"] + frag_slots:
         runner.release(slot)
@@ -456,7 +544,7 @@ def _trim1_fixpoint(runner, re, re_cnt, active, a_cnt, emit_done, max_iters=4):
         trimmed_cnt = a_cnt - s_cnt
         runner.log("trim1", trimmed=trimmed_cnt, active=s_cnt)
         if trimmed_cnt > 0:
-            trimmed = active.join(survivors.select("id"), "id", "left_anti").select(
+            trimmed = active.join(bc(survivors, s_cnt).select("id"), "id", "left_anti").select(
                 "id", F.col("id").alias("scc_id")
             )
             emit_done(trimmed)
@@ -511,7 +599,7 @@ def _trim2(runner, re, re_cnt, active, a_cnt, emit_done):
     ).distinct()
     retired, r_cnt = runner.tick("t2retired", retired)
     emit_done(retired)
-    active, a_cnt = runner.tick("active_next", active.join(retired.select("id"), "id", "left_anti"))
+    active, a_cnt = runner.tick("active_next", active.join(bc(retired, r_cnt).select("id"), "id", "left_anti"))
     runner.promote("active_next", "active")
     rt = bc(retired, r_cnt).select("id")
     re, re_cnt = runner.tick(
@@ -545,7 +633,9 @@ def _decompose(runner, re, active, a_cnt, iters):
         if new_sum == prev_sum:
             break
         prev_sum = new_sum
-    active, a_cnt = runner.tick("active_next", active.join(lab, "id").select("id", F.col("label").alias("range")))
+    active, a_cnt = runner.tick(
+        "active_next", active.join(bc(lab, a_cnt), "id").select("id", F.col("label").alias("range"))
+    )
     runner.promote("active_next", "active")
     runner.release("dec_edges")
     runner.release("dec_lab")

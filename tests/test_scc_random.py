@@ -3,7 +3,6 @@ agree with the Kosaraju oracle on seeded Erdos-Renyi digraphs and on the
 degenerate shapes fixtures don't cover (no edges, self-loops only,
 2-cycles, star)."""
 
-import functools
 import random
 
 import pytest
@@ -25,7 +24,7 @@ def _check_all_variants(spark, erows, vids):
     for fn, name in (
         (lambda: strongly_connected_components(spark, edges, verts), "fbtrim"),
         (lambda: scc_coloring(spark, edges, verts), "coloring"),
-        (lambda: scc_partitioned(spark, edges, verts, n_parts=4), "partitioned"),
+        (lambda: scc_partitioned(spark, edges, verts), "partitioned"),
     ):
         got = {r["id"]: r["scc_id"] for r in fn().collect()}
         assert got == exp, f"{name} mismatch"
@@ -66,10 +65,33 @@ def test_scc_operators_release_working_frames(spark):
     for fn, name in (
         (strongly_connected_components, "fbtrim"),
         (scc_coloring, "coloring"),
-        (functools.partial(scc_partitioned, n_parts=4), "partitioned"),
+        (scc_partitioned, "partitioned"),
     ):
         runner = SuperstepRunner(spark)
         got = {r["id"]: r["scc_id"] for r in fn(spark, edges, verts, runner=runner).collect()}
         assert got == exp, f"{name} mismatch"
         left = sorted(s for s in runner._live if not s.startswith("done_"))
         assert left == [], f"{name} left {left} live"
+
+
+def test_scc_rerun_after_local_finish_adds_no_rows(spark, tmp_path):
+    """A driver-side local finish retires every active vertex, so the
+    final checkpoint must record an empty active set: a rerun on the same
+    checkpoint directory resumes from it and returns the same rows, no
+    vertex twice."""
+    rng = random.Random(9)
+    n = 40
+    vids = list(range(n))
+    erows = sorted({(rng.randrange(n), rng.randrange(n)) for _ in range(120)})
+    edges = spark.createDataFrame(erows, "src long, dst long")
+    verts = spark.createDataFrame([(v,) for v in vids], "id long")
+    exp = kosaraju_scc(erows, vids)
+    for run in ("first", "rerun"):
+        runner = SuperstepRunner(spark, checkpoint_dir=str(tmp_path / "ck"))
+        rows = strongly_connected_components(
+            spark, edges, verts, runner=runner, local_finish_edges=10_000
+        ).collect()
+        if run == "first":
+            assert any(m["phase"] == "local_finish" for m in runner.metrics)
+        assert len(rows) == n, run
+        assert {r["id"]: r["scc_id"] for r in rows} == exp, run

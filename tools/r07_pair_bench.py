@@ -51,7 +51,7 @@ elif leg == "scc_coloring":
     n = scc_coloring(spark, edges, verts.select("id")).count()
 elif leg == "scc_partitioned":
     from detectingscc_spark.operators.partitioned import scc_partitioned
-    n = scc_partitioned(spark, edges, verts.select("id"), n_parts=32, local_finish_edges=0).count()
+    n = scc_partitioned(spark, edges, verts.select("id"), local_finish_edges=0).count()
 elif leg == "pagerank_20it":
     from detectingscc_spark.operators.pagerank import pagerank
     n = pagerank(spark, edges, verts.select("id"), fixed_iters=20).count()

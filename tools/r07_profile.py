@@ -100,7 +100,7 @@ def main():
         if leg == "scc_partitioned":
             from detectingscc_spark.operators.partitioned import scc_partitioned
             return scc_partitioned(
-                spark, edges, verts.select("id"), n_parts=32, local_finish_edges=0
+                spark, edges, verts.select("id"), local_finish_edges=0
             ).count()
         if leg == "pagerank_20it":
             from detectingscc_spark.operators.pagerank import pagerank
