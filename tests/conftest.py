@@ -18,4 +18,10 @@ def spark():
     yield s
 
 
+# GTgraph fixtures with the shapes of the reference's samples (SURVEY.md §5),
+# written by tests/data/make_samples.py
+FIXTURE_DATA = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
+
+# The reference's own files, for the few tests whose expected values belong
+# to those bytes alone; they skip where the reference is absent.
 REF_DATA = "/root/reference/data"

@@ -12,13 +12,13 @@ from detectingscc_spark.operators.pagerank import pagerank
 from detectingscc_spark.operators.triangles import triangle_count, triangle_count_per_vertex
 from detectingscc_spark.sources.gtgraph import gtgraph_meta, read_gtgraph
 
-from .conftest import REF_DATA
+from .conftest import FIXTURE_DATA
 from .oracles import cc_unionfind, hits_numpy, lpa_sync, pagerank_numpy, triangles_brute
 
 
 @pytest.fixture(scope="module")
 def g128(spark):
-    path = os.path.join(REF_DATA, "sample128.gr")
+    path = os.path.join(FIXTURE_DATA, "sample128.gr")
     v, _ = gtgraph_meta(spark, path)
     edges = read_gtgraph(spark, path)
     erows = [(r["src"], r["dst"]) for r in edges.collect()]

@@ -6,24 +6,24 @@ costs a fixed scheduling round-trip, so an accidental second eager
 action per tick (a stray .count(), an un-folded Observation, an eager
 sizing job) silently doubles the fixed cost long before any benchmark
 at fixture scale notices. The counts below are exactly reproducible
-run-to-run (74/74/74 across trials at commit time); the bounds carry
-~15% headroom for benign plan evolution while still catching a
-+1-action-per-tick regression (sample1 alone has 7 FWD + 7 BWD hops,
-so that failure mode adds >=14 jobs)."""
+run-to-run (71 on sample1 in each of three trials); the bounds carry
+headroom for benign plan evolution while still catching a
++1-action-per-tick regression (sample1 alone runs 9 FWD + 9 BWD
+iterations, so that failure mode adds >=18 jobs: 71 + 18 > 85)."""
 
 import os
 
 from detectingscc_spark.operators.scc import strongly_connected_components
 from detectingscc_spark.sources.gtgraph import gtgraph_meta, read_gtgraph
 
-from .conftest import REF_DATA
+from .conftest import FIXTURE_DATA
 
-# measured 62 (sample0) / 74 (sample1) jobs at the round-6 commit
+# measured 53 (sample0) / 71 (sample1) jobs on the tests/data fixtures
 _BUDGET = {"sample0": 72, "sample1": 85}
 
 
 def _jobs_for_scc(spark, name):
-    path = os.path.join(REF_DATA, f"{name}.gr")
+    path = os.path.join(FIXTURE_DATA, f"{name}.gr")
     v, _ = gtgraph_meta(spark, path)
     edges = read_gtgraph(spark, path)
     sc = spark.sparkContext
@@ -52,15 +52,15 @@ def test_scc_driver_action_budget(spark):
 
 def test_hits_driver_action_budget(spark):
     """hits() submits a LINEAR number of jobs in the iteration count:
-    measured exactly 16/iteration + 6 constant (iters 1..4 -> 22/38/54/70
-    at commit time; the 16 = 2 eager raw-push checkpoints plus AQE
-    stage/broadcast sub-jobs per half-step). The budget (60 for iters=3,
-    ~11% headroom) catches the two regressions that matter at cluster
-    scale: a new eager action per half-step (+6) and, worse, any
-    superlinear growth from un-truncated lineage re-evaluation."""
+    measured exactly 10/iteration + 16 constant (iters 1..4 -> 26/36/46/56,
+    the same in each of three trials). The budget (51 for iters=3, the
+    largest that a +6 regression still exceeds) catches the two
+    regressions that matter at cluster scale: a new eager action per
+    half-step (+6) and, worse, any superlinear growth from un-truncated
+    lineage re-evaluation."""
     from detectingscc_spark.operators.hits import hits
 
-    path = os.path.join(REF_DATA, "sample1.gr")
+    path = os.path.join(FIXTURE_DATA, "sample1.gr")
     v, _ = gtgraph_meta(spark, path)
     edges = read_gtgraph(spark, path)
     sc = spark.sparkContext
@@ -72,8 +72,8 @@ def test_hits_driver_action_budget(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert n == v
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert jobs <= 60, (
-        f"hits(iters=3) submitted {jobs} Spark jobs (budget 60, measured "
-        "54 = 16/iter + 6 at commit time): an eager action crept into the "
+    assert jobs <= 51, (
+        f"hits(iters=3) submitted {jobs} Spark jobs (budget 51, measured "
+        "46 = 10/iter + 16): an eager action crept into the "
         "per-half-step path or lineage re-evaluation went superlinear"
     )

@@ -10,7 +10,7 @@ from detectingscc_spark.operators.scc import strongly_connected_components
 from detectingscc_spark.plans.superstep import SuperstepRunner
 from detectingscc_spark.sources.gtgraph import gtgraph_meta, read_gtgraph
 
-from .conftest import REF_DATA
+from .conftest import FIXTURE_DATA
 
 
 def _result_set(df):
@@ -18,7 +18,7 @@ def _result_set(df):
 
 
 def test_scc_resume_identical(spark, tmp_path):
-    path = os.path.join(REF_DATA, "sample128.gr")
+    path = os.path.join(FIXTURE_DATA, "sample128.gr")
     v, _ = gtgraph_meta(spark, path)
     edges = read_gtgraph(spark, path)
     verts = spark.range(1, v + 1)
@@ -58,7 +58,7 @@ def test_resume_orc_state_format(spark, tmp_path):
     manifest records the format, and resume from an ORC checkpoint
     reproduces the uninterrupted run exactly — reading with the MANIFEST's
     format even when the restarted runner is configured differently."""
-    path = os.path.join(REF_DATA, "sample128.gr")
+    path = os.path.join(FIXTURE_DATA, "sample128.gr")
     v, _ = gtgraph_meta(spark, path)
     edges = read_gtgraph(spark, path)
     verts = spark.range(1, v + 1)
@@ -94,7 +94,7 @@ def test_resume_orc_state_format(spark, tmp_path):
 
 
 def test_manifest_contents(spark, tmp_path):
-    path = os.path.join(REF_DATA, "sample5.gr")
+    path = os.path.join(FIXTURE_DATA, "sample5.gr")
     v, _ = gtgraph_meta(spark, path)
     edges = read_gtgraph(spark, path)
     ck = str(tmp_path / "ck")

@@ -1,14 +1,17 @@
-"""SCC exactness vs independent Kosaraju oracle on the reference's own
-fixture graphs (/root/reference/data/*.gr) — golden values in SURVEY.md §5."""
+"""SCC exactness vs independent Kosaraju oracle on the GTgraph fixtures in
+tests/data, which have the shapes of the reference's samples — golden
+values in SURVEY.md §5. The 32k-vertex giant-SCC test reads the
+reference's own sample2.gr and skips where it is absent."""
 
 import os
+from collections import Counter
 
 import pytest
 
 from detectingscc_spark.operators.scc import strongly_connected_components
 from detectingscc_spark.sources.gtgraph import gtgraph_meta, read_gtgraph
 
-from .conftest import REF_DATA
+from .conftest import FIXTURE_DATA, REF_DATA
 from .oracles import kosaraju_scc
 
 GOLDEN = {
@@ -20,8 +23,39 @@ GOLDEN = {
 }
 
 
-def _run_scc(spark, name, **kw):
-    path = os.path.join(REF_DATA, name)
+# SURVEY.md §5, one row per reference sample: V, E, #SCCs, the largest SCC's
+# size, how many SCCs have that size, and singletons
+SURVEY_ROWS = {
+    "sample0.gr": (6, 5, 4, 3, 1, 3),
+    "sample4.gr": (8, 13, 4, 3, 2, 2),
+    "sample5.gr": (13, 17, 3, 11, 1, 2),
+    "sample1.gr": (32, 151, 3, 30, 1, 2),
+    "sample128.gr": (128, 374, 13, 113, 1, 10),
+}
+
+
+def test_fixture_shapes(spark):
+    """Each in-repo fixture has its reference sample's SURVEY.md §5 row, so
+    GOLDEN (and the CLI's 3 groups on sample1.gr) rest on the document,
+    not on the engine's output."""
+    assert sorted(f for f in os.listdir(FIXTURE_DATA) if f.endswith(".gr")) == sorted(SURVEY_ROWS)
+    for name, (v, e, n_scc, largest, n_largest, singletons) in SURVEY_ROWS.items():
+        path = os.path.join(FIXTURE_DATA, name)
+        assert gtgraph_meta(spark, path) == (v, e), name
+        arcs = [(r["src"], r["dst"]) for r in read_gtgraph(spark, path).collect()]
+        assert len(arcs) == e, name
+        sizes = Counter(Counter(kosaraju_scc(arcs, list(range(1, v + 1))).values()).values())
+        assert sum(sizes.values()) == n_scc == GOLDEN[name], name
+        assert max(sizes) == largest and sizes[largest] == n_largest, name
+        assert sizes[1] == singletons, name
+        if name == "sample0.gr":
+            # the duplicate arc and arcless vertices the reference's sample0 has
+            assert arcs.count((4, 1)) == 2
+            assert not {3, 6} & {x for a in arcs for x in a}
+
+
+def _run_scc(spark, name, data=FIXTURE_DATA, **kw):
+    path = os.path.join(data, name)
     v, _ = gtgraph_meta(spark, path)
     edges = read_gtgraph(spark, path)
     vertices = spark.range(1, v + 1).withColumnRenamed("id", "id")
@@ -120,8 +154,12 @@ def test_entry_contract(spark):
 
 
 @pytest.mark.slow
+@pytest.mark.skipif(
+    not os.path.exists(os.path.join(REF_DATA, "sample2.gr")),
+    reason="needs the reference's sample2.gr, whose bytes the golden belongs to",
+)
 def test_scc_sample2_giant(spark):
     """32,768-vertex giant-SCC graph (golden: 4,889 SCCs, largest 25,039)."""
-    got, expect, v = _run_scc(spark, "sample2.gr", local_finish_edges=50_000)
+    got, expect, v = _run_scc(spark, "sample2.gr", data=REF_DATA, local_finish_edges=50_000)
     assert got == expect
     assert len(set(got.values())) == 4889

@@ -11,6 +11,7 @@ import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SAMPLE1 = os.path.join(REPO, "tests", "data", "sample1.gr")
 
 
 def _spark_submit_bin() -> str:
@@ -39,7 +40,7 @@ def test_spark_submit_pyfiles_scc(tmp_path):
         "--py-files", zip_path,
         str(script),
         "--algo", "scc",
-        "--input", "/root/reference/data/sample1.gr",
+        "--input", SAMPLE1,
         "--output", str(out_dir),
         "--checkpoint-dir", str(ckpt),
         "-w", "8",
@@ -108,11 +109,10 @@ def test_cli_companion_algos_inprocess(spark, tmp_path, monkeypatch):
 
     from detectingscc_spark.__main__ import main
 
-    gr = "/root/reference/data/sample1.gr"
     for algo in ("hits", "salsa", "eigen", "harmonic", "ktruss", "linkpred"):
         out = tmp_path / algo
         monkeypatch.setattr(sys, "argv", [
-            "detectingscc_spark", "--algo", algo, "--input", gr,
+            "detectingscc_spark", "--algo", algo, "--input", SAMPLE1,
             "--output", str(out), "--iters", "3", "--sources-mod", "2",
         ])
         main()
