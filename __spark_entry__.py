@@ -49,7 +49,7 @@ def entry(spark: SparkSession) -> DataFrame:
     from detectingscc_spark.operators.scc import strongly_connected_components
 
     edges = _edges(spark, "/root/testdata/sf0.001")
-    return strongly_connected_components(spark, edges, local_finish_edges=20_000)
+    return strongly_connected_components(spark, edges)
 
 
 # --------------------------------------------------------------------
@@ -59,15 +59,16 @@ def entry(spark: SparkSession) -> DataFrame:
 def q_scc(spark, sf_dir):
     from detectingscc_spark.operators.scc import strongly_connected_components
 
-    return strongly_connected_components(spark, _edges(spark, sf_dir), local_finish_edges=20_000)
+    return strongly_connected_components(spark, _edges(spark, sf_dir))
 
 
 def q_scc_partitioned(spark, sf_dir):
-    """detectSCC analog: per-partition local Tarjan + condensation merge
-    (same output contract as q_scc -> same SQL oracle)."""
+    """detectSCC analog: FB rounds whose SCC-closed ranges finish in one
+    executor-side Tarjan job (same output contract as q_scc -> same SQL
+    oracle)."""
     from detectingscc_spark.operators.partitioned import scc_partitioned
 
-    return scc_partitioned(spark, _edges(spark, sf_dir), local_finish_edges=20_000)
+    return scc_partitioned(spark, _edges(spark, sf_dir))
 
 
 def q_scc_coloring(spark, sf_dir):
@@ -103,7 +104,7 @@ def q_scc_dag(spark, sf_dir):
     from detectingscc_spark.operators.scc import strongly_connected_components
 
     e = _sparse_edges(spark, sf_dir)
-    scc = strongly_connected_components(spark, e, local_finish_edges=20_000)
+    scc = strongly_connected_components(spark, e)
     s = scc.withColumnRenamed("id", "src").withColumnRenamed("scc_id", "from_scc")
     t = scc.withColumnRenamed("id", "dst").withColumnRenamed("scc_id", "to_scc")
     return (
@@ -122,7 +123,7 @@ def q_dag_reach(spark, sf_dir):
     from detectingscc_spark.operators.scc import strongly_connected_components
 
     e = _sparse_edges(spark, sf_dir)
-    scc = strongly_connected_components(spark, e, local_finish_edges=20_000)
+    scc = strongly_connected_components(spark, e)
     s = scc.withColumnRenamed("id", "src").withColumnRenamed("scc_id", "from_scc")
     t = scc.withColumnRenamed("id", "dst").withColumnRenamed("scc_id", "to_scc")
     dag = (
@@ -215,7 +216,7 @@ def q_dag_layers(spark, sf_dir):
     from detectingscc_spark.operators.scc import strongly_connected_components
 
     e = _sparse_edges(spark, sf_dir)
-    scc = strongly_connected_components(spark, e, local_finish_edges=20_000)
+    scc = strongly_connected_components(spark, e)
     s = scc.withColumnRenamed("id", "src").withColumnRenamed("scc_id", "from_scc")
     t = scc.withColumnRenamed("id", "dst").withColumnRenamed("scc_id", "to_scc")
     dag = (
@@ -543,9 +544,7 @@ def q_corpus_scc(spark, sf_dir):
     edges = edges.select("src", "dst")
     edges.write.mode("overwrite").parquet(f"{_CORPUS_ART}/edges")
     verts.write.mode("overwrite").parquet(f"{_CORPUS_ART}/verts")
-    return strongly_connected_components(
-        spark, edges, verts, local_finish_edges=20_000
-    )
+    return strongly_connected_components(spark, edges, verts)
 
 
 # ---- TPC-H-ish relational layer -------------------------------------

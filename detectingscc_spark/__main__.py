@@ -43,7 +43,6 @@ def main():
                     "runtime jar — see plans/superstep.py)")
     ap.add_argument("--no-trim2", action="store_true", help="reference -q off")
     ap.add_argument("--trim-iters", type=int, default=4, help="reference -p depth")
-    ap.add_argument("--local-finish-edges", type=int, default=0)
     ap.add_argument("--index-path", default=None,
                     help="persisted ANN index dir (required for "
                     "--algo ann-build / ann-probe)")
@@ -155,7 +154,6 @@ def main():
         "|".join(
             str(x)
             for x in (args.input, args.algo, args.no_trim2, args.trim_iters,
-                      args.local_finish_edges,
                       # result-shaping knobs of the companion algos: a
                       # rerun on the same --checkpoint-dir with a
                       # different k / iteration count / source set must
@@ -168,10 +166,7 @@ def main():
         state_format=args.state_format,
     )
     t0 = time.time()
-    scc_flags = dict(
-        runner=runner, trim2_enabled=not args.no_trim2, trim_iters=args.trim_iters,
-        local_finish_edges=args.local_finish_edges,
-    )
+    scc_flags = dict(runner=runner, trim2_enabled=not args.no_trim2, trim_iters=args.trim_iters)
     if args.algo == "scc":
         from .operators.scc import strongly_connected_components
 

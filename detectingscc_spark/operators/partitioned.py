@@ -7,27 +7,16 @@ per-vertex reachability closures as host std::sets and intersects them
 pairwise up a partition-merge tree (/root/reference/src/scc_WCC.cu:
 1276-1329, 1345-1528) — quadratic memory and a 10,001-edge device cap.
 
-Default (no `partitions`): the partitions are the FB engine's own
-ranges. One FB round splits the graph into the pivot's SCC and its
-forward-only, backward-only and unreached ranges, and no SCC crosses a
-range — so every range is a partition that provably confines its SCCs,
-which a METIS edge cut can only approximate. From round 2 on, the engine
-(`strongly_connected_components` with `_finish_caps`) finishes every
-range within `max_local_edges` / `max_local_verts` in ONE executor-side
-Tarjan job keyed by range (`scc._finish_ranges`) and emits its labels as
-final; no contraction is needed. Ranges over a cap continue through
-decomposition, trims, pivots and BFS. On the 5k-file corpus graph
-(seed 42) round 1 leaves 5 vertices in 2 ranges, so the call is one FB
-round plus one finish.
-
-A range is finished by one Python task: `_tarjan_local` costs about
-10 µs and 125 bytes of Python heap per edge (617 MB at the default
-5M-edge cap). When the round-1 pivot misses a giant SCC, the whole SCC
-is one range; on a 4-core local[4] machine finishing it still beat FB
-rounds at every size measured, up to the cap (warm, per call: 80k
-edges 12.7 s vs 24.7 s; 1.3M: 56-68 s vs 98-103 s; 5M: 153 s vs over
-190 s). With many executors FB gains parallelism the finish does not,
-so there the crossover may sit below the caps; it is unmeasured.
+Default (no `partitions`): plain `strongly_connected_components`. Its
+partitions are the FB engine's own ranges: one FB round splits the graph
+into the pivot's SCC and its forward-only, backward-only and unreached
+ranges, and no SCC crosses a range — so every range is a partition that
+provably confines its SCCs, which a METIS edge cut can only approximate.
+From round 2 on the engine finishes every range within its caps
+(`scc.FINISH_MAX_EDGES` / `scc.FINISH_MAX_VERTS`) in ONE executor-side
+Tarjan job keyed by range and emits its labels as final; no contraction
+is needed. On the 5k-file corpus graph (seed 42) round 1 leaves 5
+vertices in 2 ranges, so the call is one FB round plus one finish.
 
 With `partitions=(id, part)` (the METIS analog, the reference's
 src/load.cpp:115-130) the labels are data and need not confine SCCs,
@@ -36,9 +25,10 @@ translation SURVEY.md §3.3 calls for:
 
   1. local phase: Tarjan per part-induced subgraph (`scc.tarjan_groups`
      keyed by part); local label = min member id of the part-local SCC.
-     A part over either cap keeps identity labels (a no-op contraction)
-     and the global phase absorbs it, so a pathological labelling
-     degrades to global-engine throughput instead of OOMing an executor.
+     A part over either finish cap keeps identity labels (a no-op
+     contraction) and the global phase absorbs it, so a pathological
+     labelling degrades to global-engine throughput instead of OOMing
+     an executor.
   2. contraction: every edge (u,v) -> (L(u), L(v)); local SCCs are always
      subsets of global SCCs, so contracting them preserves the SCC
      structure (the condensation-of-subgraph lemma).
@@ -64,28 +54,21 @@ def scc_partitioned(
     vertices: DataFrame | None = None,
     *,
     partitions: DataFrame | None = None,
-    max_local_edges: int = 5_000_000,
-    max_local_verts: int = 5_000_000,
     n_parts: int | None = None,
     **scc_kwargs,
 ) -> DataFrame:
     """(id, scc_id) with scc_id = min member id; identical to
     strongly_connected_components, computed partition-first.
 
-    Default: FB round 1, then every range within max_local_edges /
-    max_local_verts is finished by one executor-side Tarjan job.
+    Default: the FB engine itself, whose range finish is the local phase.
     `partitions`: optional (id, part) label table for the METIS-style
     local phase + contraction; a vertex it does not label takes its own
     id as part (any labelling is valid, see the module docstring).
 
-    `n_parts` is accepted and ignored: it sized the retired hash
-    partitioning, and the benchmark harness (perfbench/workloads.py)
-    still passes it.
+    `n_parts` is accepted and ignored (benchmark callers pass it).
     """
     if partitions is None:
-        return strongly_connected_components(
-            spark, edges, vertices, _finish_caps=(max_local_edges, max_local_verts), **scc_kwargs
-        )
+        return strongly_connected_components(spark, edges, vertices, **scc_kwargs)
 
     E = canonical_edges(edges)
     vp = vertex_universe(E, vertices).join(
@@ -98,7 +81,7 @@ def scc_partitioned(
         .where(F.col("sp") == F.col("dp"))
         .select(F.col("sp").alias("part"), "src", "dst")
     )
-    small = small_groups(local_edges, vp, "part", max_local_edges, max_local_verts)
+    small = small_groups(local_edges, vp, "part")
     # a part over either cap keeps identity labels: contraction maps its
     # edges to themselves, so the global phase sees its full subgraph
     local = (

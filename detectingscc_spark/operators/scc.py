@@ -24,14 +24,13 @@ Scale design (100 TB): the full edge table is joined exactly ONCE (round
 BFS, decomposition — operates on the monotonically shrinking residual
 edge set, which is filtered in place as vertices retire (the Spark analog
 of the reference keeping all state device-resident and masking retired
-rows per kernel). When the residual drops below `local_finish_edges` the
-driver finishes with an in-memory Tarjan pass — the distributed rounds
-have already removed the giant SCC and trims, and a sub-threshold tail is
-latency- not throughput-bound (intent of detectSCC's merge phase,
-/root/reference/src/scc_WCC.cu:1345-1528, without its quadratic closure
-sets). `scc_partitioned` instead finishes, from round 2 on, every range
-within its caps in one executor-side Tarjan job (`_finish_ranges`): FB
-ranges are SCC-closed, so range-local SCCs are final.
+rows per kernel). From round 2 on, right after the residual refresh,
+every range within FINISH_MAX_EDGES edges and FINISH_MAX_VERTS vertices
+is finished in ONE executor-side Tarjan job (`_finish_ranges`): FB ranges
+are SCC-closed, so range-local SCCs are final, and nothing is collected
+to the driver (intent of detectSCC's merge phase, scc_WCC.cu:1345-1528,
+without its quadratic closure sets). Larger ranges go on through
+decomposition, trims, pivots and BFS.
 
 Superstep fixed-cost discipline (the scaling-efficiency levers):
   * ONE driver action per tick — row counts ride as observed metrics of
@@ -61,10 +60,22 @@ from ..graph import canonical_edges, vertex_universe
 from ..plans.superstep import SuperstepRunner, bc, broadcastable
 from .components import label_step
 
+# Range-finish caps, read at call time (tests patch them). A range is
+# finished by one Python task: `_tarjan_local` costs about 10 µs and 125
+# bytes of Python heap per edge (617 MB at the 5M-edge cap). When the
+# round-1 pivot misses a giant SCC, the whole SCC is one range; on a
+# 4-core local[4] machine finishing it still beat FB rounds at every size
+# measured, up to the cap (warm, per call: 80k edges 12.7 s vs 24.7 s;
+# 1.3M: 56-68 s vs 98-103 s; 5M: 153 s vs over 190 s). With many
+# executors FB gains parallelism the finish does not, so there the
+# crossover may sit below the caps; it is unmeasured.
+FINISH_MAX_EDGES = 5_000_000
+FINISH_MAX_VERTS = 5_000_000
+
 
 def _tarjan_local(edge_rows, vertex_ids):
-    """Iterative Tarjan on a small graph held in memory (the driver's
-    residual tail or one group of `tarjan_groups`).
+    """Iterative Tarjan on a small graph held in memory (one group of
+    `tarjan_groups`).
     Returns {vertex: scc_min_id}."""
     adj: dict = {v: [] for v in vertex_ids}
     for s, d in edge_rows:
@@ -126,17 +137,17 @@ def _tarjan_group(key, epdf: pd.DataFrame, vpdf: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame({"id": ids, "scc_id": [labels[v] for v in ids]})
 
 
-def small_groups(edges: DataFrame, verts: DataFrame, key: str, max_edges: int, max_verts: int) -> DataFrame:
-    """(key, ne, nv) of the `key` groups with at most `max_edges` edges
-    and `max_verts` vertices: ONE aggregate over the tagged union of
-    edges(key, ...) and verts(key, ...), so a group without edges still
-    appears."""
+def small_groups(edges: DataFrame, verts: DataFrame, key: str) -> DataFrame:
+    """(key, ne, nv) of the `key` groups with at most FINISH_MAX_EDGES
+    edges and FINISH_MAX_VERTS vertices: ONE aggregate over the tagged
+    union of edges(key, ...) and verts(key, ...), so a group without
+    edges still appears."""
     return (
         edges.select(key, F.lit(1).alias("e"))
         .unionByName(verts.select(key, F.lit(0).alias("e")))
         .groupBy(key)
         .agg(F.sum("e").alias("ne"), F.sum(1 - F.col("e")).alias("nv"))
-        .where((F.col("ne") <= max_edges) & (F.col("nv") <= max_verts))
+        .where((F.col("ne") <= FINISH_MAX_EDGES) & (F.col("nv") <= FINISH_MAX_VERTS))
     )
 
 
@@ -163,12 +174,11 @@ def strongly_connected_components(
     checkpoint_dir: str | None = None,
     max_rounds: int = 64,
     max_bfs_hops: int = 10_000,
-    local_finish_edges: int = 0,
+    local_finish_edges: int | None = None,
     decompose_every: int = 4,
     decompose_iters: int = 12,
     trim2_enabled: bool = True,
     trim_iters: int = 4,
-    _finish_caps: tuple[int, int] | None = None,
 ) -> DataFrame:
     """Compute SCCs of a directed graph given as edges(src, dst).
 
@@ -176,12 +186,7 @@ def strongly_connected_components(
     V explicitly; vertices without arcs are singleton SCCs — e.g.
     /root/reference/data/sample0.gr has V=6 with two arcless vertices).
 
-    Set `local_finish_edges > 0` to let the driver finish a sub-threshold
-    residual with in-memory Tarjan; tests exercise both paths.
-
-    `_finish_caps=(max_edges, max_verts)` (scc_partitioned's range
-    finish) retires, from round 2 on, every range within both caps in one
-    executor-side Tarjan job (`_finish_ranges`).
+    `local_finish_edges` is accepted and ignored (benchmark callers pass it).
     """
     runner = runner or SuperstepRunner(spark, checkpoint_dir=checkpoint_dir)
 
@@ -250,12 +255,9 @@ def strongly_connected_components(
             re_cnt = re.count()
         else:
             re, re_cnt = refresh_residual(re, active, a_cnt)
-            if _finish_caps:
-                active, a_cnt, re, re_cnt = _finish_ranges(
-                    runner, re, re_cnt, active, a_cnt, _finish_caps, emit_done
-                )
-                if a_cnt == 0:
-                    break
+            active, a_cnt, re, re_cnt = _finish_ranges(runner, re, re_cnt, active, a_cnt, emit_done)
+            if a_cnt == 0:
+                break
 
         # ---- optional range decomposition (weak components of residual)
         # (after refresh: must only see same-CURRENT-range edges, else it
@@ -281,21 +283,6 @@ def strongly_connected_components(
                 )
             if a_cnt == 0:
                 break
-
-        # ---- optional driver-side finish for a tiny residual ----------
-        if local_finish_edges and re_cnt <= local_finish_edges:
-            rows = [(r["src"], r["dst"]) for r in re.select("src", "dst").collect()]
-            ids = [r["id"] for r in active.select("id").collect()]
-            labels = _tarjan_local(rows, ids)
-            emit_done(
-                spark.createDataFrame(
-                    [(int(v), int(s)) for v, s in labels.items()], "id long, scc_id long"
-                )
-            )
-            # the final checkpoint must not record the retired set as active
-            active, a_cnt, re = _emptied(active), 0, _emptied(re)
-            runner.log("local_finish", vertices=len(ids), edges=len(rows))
-            break
 
         # ---- pivot election: per-range argmax of indeg*outdeg ---------
         # both degrees in ONE tagged-union agg (1 exchange) instead of
@@ -363,9 +350,13 @@ def _emptied(df: DataFrame) -> DataFrame:
     return df.where(F.lit(False))
 
 
-def _finish_ranges(runner, re, re_cnt, active, a_cnt, caps, emit_done):
-    """Retire every range with at most caps = (max edges, max vertices)
-    in ONE executor-side Tarjan job (`tarjan_groups` keyed by range).
+def _finish_ranges(runner, re, re_cnt, active, a_cnt, emit_done):
+    """Retire every range within FINISH_MAX_EDGES / FINISH_MAX_VERTS in
+    ONE executor-side Tarjan job (`tarjan_groups` keyed by range). When
+    all of them are edgeless (the usual round 2 on the corpus graphs:
+    a few vertices whose edges left with the pivot's SCC), every vertex
+    is its own SCC and no Python task runs: a cold Python worker costs
+    seconds.
 
     Called right after a round >= 2 refreshes the residual. Every range
     is then SCC-closed: an FB split and a weak-component refinement never
@@ -376,14 +367,17 @@ def _finish_ranges(runner, re, re_cnt, active, a_cnt, caps, emit_done):
     from pyspark.sql import Observation
 
     obs = Observation()
-    small = small_groups(re, active, "range", *caps)
+    small = small_groups(re, active, "range")
     small, s_cnt = runner.tick(
         "small", small.observe(obs, F.sum("ne").alias("ne"), F.sum("nv").alias("nv"))
     )
     fin_e, fin_v = obs.get["ne"] or 0, obs.get["nv"] or 0
     if fin_v:
         keys = bc(small, s_cnt)
-        emit_done(tarjan_groups(re, active, keys, "range"))
+        if fin_e:
+            emit_done(tarjan_groups(re, active, keys, "range"))
+        else:
+            emit_done(active.join(keys, "range", "left_semi").select("id", F.col("id").alias("scc_id")))
         runner.log("finish_ranges", ranges=s_cnt, vertices=fin_v, edges=fin_e)
         if fin_v == a_cnt:
             active, re = _emptied(active), _emptied(re)

@@ -25,3 +25,12 @@ FIXTURE_DATA = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
 # The reference's own files, for the few tests whose expected values belong
 # to those bytes alone; they skip where the reference is absent.
 REF_DATA = "/root/reference/data"
+
+
+def no_range_finish(monkeypatch):
+    """Both SCC range-finish caps 0: no range qualifies, so every round of
+    the FB engine runs decomposition, trims, pivots and BFS."""
+    from detectingscc_spark.operators import scc
+
+    monkeypatch.setattr(scc, "FINISH_MAX_EDGES", 0)
+    monkeypatch.setattr(scc, "FINISH_MAX_VERTS", 0)

@@ -18,7 +18,8 @@ from detectingscc_spark.sources.gtgraph import gtgraph_meta, read_gtgraph
 
 from .conftest import FIXTURE_DATA
 
-# measured 53 (sample0) / 71 (sample1) jobs on the tests/data fixtures
+# measured 53 (sample0) / 71 (sample1) jobs on the tests/data fixtures,
+# the same with the range finish on every call: both finish in round 1
 _BUDGET = {"sample0": 72, "sample1": 85}
 
 
@@ -30,9 +31,7 @@ def _jobs_for_scc(spark, name):
     group = f"action-budget-{name}"
     sc.setJobGroup(group, "driver-action budget guard")
     try:
-        n = strongly_connected_components(
-            spark, edges, spark.range(1, v + 1), local_finish_edges=0
-        ).count()
+        n = strongly_connected_components(spark, edges, spark.range(1, v + 1)).count()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert n == v

@@ -6,7 +6,9 @@ BROADCAST_ROW_LIMIT the state side is broadcast and the edges are keyed
 by the aggregation key; past it the joins shuffle and the edges are keyed
 by the join key. The `shuffle` regime forces the second path by setting
 the limit to 0 on a graph far below the real limit. Both regimes must
-match the independent oracles exactly (PageRank to 1e-6).
+match the independent oracles exactly (PageRank to 1e-6). FB-Trim SCC
+also runs with its range finish switched off, so its rounds >= 2 (the
+weak decomposition among them) meet both regimes.
 """
 
 import random
@@ -23,6 +25,7 @@ from detectingscc_spark.operators.scc import strongly_connected_components
 from detectingscc_spark.plans import superstep
 from detectingscc_spark.plans.superstep import SuperstepRunner
 
+from .conftest import no_range_finish
 from .oracles import cc_unionfind, hits_numpy, kosaraju_scc, lpa_sync, pagerank_numpy
 
 N = 60
@@ -86,7 +89,7 @@ def test_scc_coloring(spark, graph, regime):
     assert got == kosaraju_scc(EDGES, IDS)
 
 
-def test_strongly_connected_components(spark, graph, regime):
+def _scc_phases(spark, graph):
     edges, verts = graph
     runner = SuperstepRunner(spark)
     got = {
@@ -94,8 +97,22 @@ def test_strongly_connected_components(spark, graph, regime):
         for r in strongly_connected_components(spark, edges, verts, runner=runner).collect()
     }
     assert got == kosaraju_scc(EDGES, IDS)
+    return {(m["phase"], m["superstep"]) for m in runner.metrics}
+
+
+def test_strongly_connected_components(spark, graph, regime):
+    # the ranges round 1 leaves are small: round 2 finishes them all
+    phases = _scc_phases(spark, graph)
+    assert ("finish_ranges", 2) in phases
+    assert not {p for p, step in phases if step >= 2} - {"finish_ranges"}
+
+
+def test_strongly_connected_components_without_finish(spark, graph, regime, monkeypatch):
+    no_range_finish(monkeypatch)
+    phases = _scc_phases(spark, graph)
     # the graph is built so that the residual's weak decomposition runs
-    assert any(m["phase"] == "decompose" for m in runner.metrics)
+    assert ("decompose", 2) in phases and ("pivots", 2) in phases
+    assert "finish_ranges" not in {p for p, _ in phases}
 
 
 def test_hits(spark, graph, regime):

@@ -14,6 +14,7 @@ from collections import Counter
 
 import pytest
 
+from detectingscc_spark.operators import scc
 from detectingscc_spark.operators.partitioned import scc_partitioned
 from detectingscc_spark.plans.superstep import SuperstepRunner
 from detectingscc_spark.sources.gtgraph import (
@@ -108,15 +109,17 @@ def test_partitioned_finishes_a_large_range(spark):
     assert [(m["superstep"], m["vertices"]) for m in finish] == [(2, 300)]
 
 
-def test_partitioned_tiny_caps_fall_through_to_fb(spark, graph):
-    """Ranges over max_local_edges / max_local_verts skip the finish and
-    go through trims, pivots and BFS, still exact."""
-    got, runner = _run(spark, graph, max_local_edges=1, max_local_verts=2)
+def test_partitioned_tiny_caps_fall_through_to_fb(spark, graph, monkeypatch):
+    """Ranges over the finish caps skip the finish and go through trims,
+    pivots and BFS, still exact."""
+    monkeypatch.setattr(scc, "FINISH_MAX_EDGES", 1)
+    monkeypatch.setattr(scc, "FINISH_MAX_VERTS", 2)
+    got, runner = _run(spark, graph)
     assert got == WANT
     assert any(m["phase"] == "pivots" and m["superstep"] >= 2 for m in runner.metrics)
 
 
-def test_partitioned_with_metis_labels(spark, graph):
+def test_partitioned_with_metis_labels(spark, graph, monkeypatch):
     """METIS path on a seeded 10-way labelling (one vertex unlabelled:
     it takes its own id as part). The vertex cap sits between the
     part sizes, so some parts run the local Tarjan and the others keep
@@ -127,7 +130,8 @@ def test_partitioned_with_metis_labels(spark, graph):
     cap = sorted(counts)[5]
     assert min(counts) <= cap < max(counts)
     labels = spark.createDataFrame(parts, "id long, part long")
-    got, _ = _run(spark, graph, partitions=labels, max_local_verts=cap)
+    monkeypatch.setattr(scc, "FINISH_MAX_VERTS", cap)
+    got, _ = _run(spark, graph, partitions=labels)
     assert got == WANT
 
 

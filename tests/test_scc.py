@@ -9,6 +9,7 @@ from collections import Counter
 import pytest
 
 from detectingscc_spark.operators.scc import strongly_connected_components
+from detectingscc_spark.plans.superstep import SuperstepRunner
 from detectingscc_spark.sources.gtgraph import gtgraph_meta, read_gtgraph
 
 from .conftest import FIXTURE_DATA, REF_DATA
@@ -86,11 +87,31 @@ def test_scc_sample128_distributed(spark):
     assert len(set(got.values())) == GOLDEN["sample128.gr"]
 
 
-def test_scc_local_finish_path(spark):
-    """Driver-side Tarjan finish must agree with the oracle (sample128,
-    threshold above its edge count so the residual finishes locally)."""
-    got, expect, _ = _run_scc(spark, "sample128.gr", local_finish_edges=1_000_000)
+def test_scc_range_finish_path(spark):
+    """The ranges round 1 leaves on sample128 are all within the finish
+    caps, so superstep 2 retires them all in one range finish."""
+    runner = SuperstepRunner(spark)
+    got, expect, _ = _run_scc(spark, "sample128.gr", runner=runner)
     assert got == expect
+    assert [m["superstep"] for m in runner.metrics if m["phase"] == "finish_ranges"] == [2]
+
+
+def test_scc_edgeless_residual_is_one_finish(spark):
+    """Round 1 leaves only edgeless vertices: a 3-clique (the pivot's SCC)
+    with a 5-arc tail in and a 5-arc tail out, which the 4-iteration trim1
+    fixpoint leaves one vertex short on each side. Superstep 2 retires both
+    with one finish_ranges record, without decomposition or trims."""
+    arcs = [(a, b) for a in range(3) for b in range(3) if a != b]
+    arcs += [(10, 11), (11, 12), (12, 13), (13, 14), (14, 0)]
+    arcs += [(0, 20), (20, 21), (21, 22), (22, 23), (23, 24)]
+    edges = spark.createDataFrame(arcs, "src long, dst long")
+    runner = SuperstepRunner(spark)
+    res = strongly_connected_components(spark, edges, runner=runner)
+    got = {r["id"]: r["scc_id"] for r in res.collect()}
+    assert got == kosaraju_scc(arcs, sorted({v for a in arcs for v in a}))
+    step2 = [m for m in runner.metrics if m["superstep"] == 2]
+    assert [m["phase"] for m in step2] == ["finish_ranges"]
+    assert step2[0]["vertices"] == 2 and step2[0]["edges"] == 0
 
 
 def test_scc_no_trim2(spark):
@@ -160,6 +181,6 @@ def test_entry_contract(spark):
 )
 def test_scc_sample2_giant(spark):
     """32,768-vertex giant-SCC graph (golden: 4,889 SCCs, largest 25,039)."""
-    got, expect, v = _run_scc(spark, "sample2.gr", data=REF_DATA, local_finish_edges=50_000)
+    got, expect, v = _run_scc(spark, "sample2.gr", data=REF_DATA)
     assert got == expect
     assert len(set(got.values())) == 4889

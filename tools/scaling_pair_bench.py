@@ -46,10 +46,7 @@ corpus = generate_corpus(spark, n_files).persist(); corpus.count()
 verts, edges, _ = ingest(spark, corpus)
 edges = edges.persist(); n_edges = edges.count()
 t0 = time.time()
-# local_finish_edges=0: fully distributed — no serial driver tail in the
-# scaling criterion (identical rationale to tools/scaling_bench.py)
-n = strongly_connected_components(spark, edges, verts.select("id"),
-                                  local_finish_edges=0).count()
+n = strongly_connected_components(spark, edges, verts.select("id")).count()
 dt = time.time() - t0
 assert n == n_files
 print(json.dumps({"cpus": cpus, "wall_sec": round(dt, 1), "edges": n_edges,

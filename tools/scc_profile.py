@@ -35,7 +35,6 @@ class T(SuperstepRunner):
 r = T(spark)
 t0 = time.time()
 res = strongly_connected_components(spark, edges, verts.select("id") if "fid" in getattr(verts, "columns", []) or "repo" in getattr(verts, "columns", []) else verts,
-        runner=r, local_finish_edges=int(os.environ.get("LOCAL_FINISH", "100000")),
-        trim_iters=int(os.environ.get("TRIM_ITERS", "4")))
+        runner=r, trim_iters=int(os.environ.get("TRIM_ITERS", "4")))
 cnt = res.count()
 print(json.dumps({"n": n, "edges": ne, "wall": time.time()-t0, "counters": r.counters}), flush=True)
