@@ -202,7 +202,7 @@ def strongly_connected_components(
         init = vertex_universe(E, vertices).select("id", F.lit(0).cast("long").alias("range"))
         active, a_cnt = runner.tick("active", init)
         # round-1 residual: the ONLY pass over the full edge table
-        re, _ = runner.tick("re", E.withColumn("range", F.lit(0).cast("long")).repartition("src"), detach=False)
+        re, re_cnt = runner.tick("re", E.withColumn("range", F.lit(0).cast("long")).repartition("src"), detach=False)
         rnd = 0
         first_done = spark.createDataFrame([], "id long, scc_id long")
 
@@ -251,9 +251,7 @@ def strongly_connected_components(
         # ---- refresh residual for current membership + ranges ---------
         # (round 1 after a cold start is a no-op: every vertex is active
         # in range 0 and the initial residual IS the canonical edge set)
-        if rnd == 1 and resumed is None:
-            re_cnt = re.count()
-        else:
+        if rnd > 1 or resumed is not None:
             re, re_cnt = refresh_residual(re, active, a_cnt)
             active, a_cnt, re, re_cnt = _finish_ranges(runner, re, re_cnt, active, a_cnt, emit_done)
             if a_cnt == 0:

@@ -36,9 +36,11 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
+from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -130,29 +132,28 @@ class SuperstepRunner:
         large edge/visited frames whose statistics only compound
         additively (semi/anti joins and unions keep sizeInBytes linear in
         the superstep count)."""
-        if truncate:
-            # eager localCheckpoint both materializes and cuts the plan;
-            # the row count rides along as an observed metric of the SAME
-            # job — one driver action per tick, not two
-            if count:
-                from pyspark.sql import Observation
-
-                obs = Observation()
-                new = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
-                    eager=True
-                )
-                cnt = int(obs.get["n"])
+        with self._phase(re.sub(r"_\d+$", "", name)):
+            if truncate:
+                # eager localCheckpoint both materializes and cuts the plan;
+                # the row count rides along as an observed metric of the SAME
+                # job — one driver action per tick, not two
+                if count:
+                    obs = Observation()
+                    new = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
+                        eager=True
+                    )
+                    cnt = int(obs.get["n"])
+                else:
+                    new = df.localCheckpoint(eager=True)
+                    cnt = None
             else:
-                new = df.localCheckpoint(eager=True)
-                cnt = None
-        else:
-            new = df.persist(StorageLevel.MEMORY_AND_DISK)
-            if count:
-                cnt = new.count()
-            else:
-                # materialize the cache without a count job
-                cnt = None
-                new.write.format("noop").mode("overwrite").save()
+                new = df.persist(StorageLevel.MEMORY_AND_DISK)
+                if count:
+                    cnt = new.count()
+                else:
+                    # materialize the cache without a count job
+                    cnt = None
+                    new.write.format("noop").mode("overwrite").save()
         with self._lock:
             old = self._live.get(name)
             self._live[name] = new
@@ -165,6 +166,19 @@ class SuperstepRunner:
             return self._detach(new), cnt
         # fresh expression ids only (no stats reset, no conversion cost)
         return new.select([F.col(c).alias(c) for c in new.columns]), cnt
+
+    @contextmanager
+    def _phase(self, stem: str):
+        """Tag the enclosed Spark jobs `phase:<run_id>/<stem>`; a tag the caller set stays."""
+        sc = self.spark.sparkContext
+        tag = f"phase:{self.run_id}/{stem}"
+        added = tag not in sc.getJobTags()
+        sc.addJobTag(tag)
+        try:
+            yield
+        finally:
+            if added:
+                sc.removeJobTag(tag)
 
     def keyed_edges(
         self, slot: str, df: DataFrame, agg_key: str, join_key: str, n_state: int
@@ -279,10 +293,11 @@ class SuperstepRunner:
             return False
         step_dir = os.path.join(self.checkpoint_dir, f"state_{self.superstep}")
         lineage = {}
-        for name, df in states.items():
-            path = os.path.join(step_dir, name)
-            df.write.mode("overwrite").format(self.state_format).save(path)
-            lineage[name] = self._lineage(df)
+        with self._phase("checkpoint"):
+            for name, df in states.items():
+                path = os.path.join(step_dir, name)
+                df.write.mode("overwrite").format(self.state_format).save(path)
+                lineage[name] = self._lineage(df)
         manifest = {
             "run_id": self.run_id,
             "fingerprint": self.fingerprint,
@@ -325,10 +340,11 @@ class SuperstepRunner:
             # misread old state. Pre-format manifests default to parquet.
             fmt = manifest.get("format", "parquet")
             try:
-                states = {
-                    name: self.spark.read.format(fmt).load(os.path.join(step_dir, name))
-                    for name in manifest["states"]
-                }
+                with self._phase("resume"):
+                    states = {
+                        name: self.spark.read.format(fmt).load(os.path.join(step_dir, name))
+                        for name in manifest["states"]
+                    }
             except Exception:
                 continue
             self.superstep = step

@@ -6,10 +6,10 @@ costs a fixed scheduling round-trip, so an accidental second eager
 action per tick (a stray .count(), an un-folded Observation, an eager
 sizing job) silently doubles the fixed cost long before any benchmark
 at fixture scale notices. The counts below are exactly reproducible
-run-to-run (71 on sample1 in each of three trials); the bounds carry
+run-to-run (69 on sample1 in each of two trials); the bounds carry
 headroom for benign plan evolution while still catching a
 +1-action-per-tick regression (sample1 alone runs 9 FWD + 9 BWD
-iterations, so that failure mode adds >=18 jobs: 71 + 18 > 85)."""
+iterations, so that failure mode adds >=18 jobs: 69 + 18 > 85)."""
 
 import os
 
@@ -18,8 +18,8 @@ from detectingscc_spark.sources.gtgraph import gtgraph_meta, read_gtgraph
 
 from .conftest import FIXTURE_DATA
 
-# measured 53 (sample0) / 71 (sample1) jobs on the tests/data fixtures,
-# the same with the range finish on every call: both finish in round 1
+# measured 51 (sample0) / 69 (sample1) jobs on the tests/data fixtures:
+# both finish in round 1, whose residual count rides on its tick
 _BUDGET = {"sample0": 72, "sample1": 85}
 
 

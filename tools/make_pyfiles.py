@@ -10,9 +10,7 @@ Usage:
       --output out/ --checkpoint-dir ckpt/ -w 256
 
 On a real cluster `<cluster>` is the YARN/K8s/standalone master and
-`-w` is sized to executors x cores; the same invocation with
-`--master local[32]` is the sandbox proxy (see tools/scaling_bench.py
-for the N-vs-4N evidence).
+`-w` is sized to executors x cores (`--master local[n]` runs it locally).
 """
 
 from __future__ import annotations
