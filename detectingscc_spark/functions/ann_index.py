@@ -100,8 +100,6 @@ def pruned_lsh_scan(
     over the two partition columns, so Catalyst resolves it against
     partition metadata (static partition pruning) — zero data files
     outside the probed directories are opened."""
-    import os
-
     by_tbl: dict[int, set[int]] = {}
     for t, bkt in probe_pairs:
         by_tbl.setdefault(int(t), set()).add(int(bkt))
@@ -109,26 +107,24 @@ def pruned_lsh_scan(
         # no probes (query ids matched no embedding rows): an empty
         # result with the index schema, not a reduce() TypeError
         return spark.read.parquet(path).where(F.lit(False))
-    if os.path.isdir(path):
-        # local artifact: hand the reader ONLY the probed bucket
-        # directories (basePath keeps the partition columns), so file
-        # listing touches |probes| directories instead of every bucket
-        # of every table — the listing job was most of the probe's wall
-        # at fixture scale. Pairs whose bucket holds no vectors have no
-        # directory and are skipped — they contribute no rows either way.
-        dirs = [
-            d
-            for t, bs in sorted(by_tbl.items())
-            for b in sorted(bs)
-            if os.path.isdir(d := os.path.join(path, f"tbl={t}", f"bucket={b}"))
-        ]
-        if not dirs:
-            return spark.read.parquet(path).where(F.lit(False))
-        idx = spark.read.option("basePath", path).parquet(*dirs)
-    else:
-        # non-local path (object store): keep the single-root read — the
-        # literal partition predicate below still prunes statically
-        idx = spark.read.parquet(path)
+    # hand the reader ONLY the probed bucket directories (basePath keeps
+    # the partition columns), so file listing touches |probes|
+    # directories instead of every bucket of every table — the listing
+    # job was most of the probe's wall at fixture scale. They are listed
+    # through the Hadoop FileSystem of `path`, so a local path, a file://
+    # URI and an object store take the same route: one glob per table.
+    # Pairs whose bucket holds no vectors have no directory and are
+    # skipped — they contribute no rows either way.
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    root = Path(path)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    dirs = []
+    for t, bs in sorted(by_tbl.items()):
+        glob = Path(root, f"tbl={t}/bucket={{{','.join(map(str, sorted(bs)))}}}")
+        dirs += [st.getPath().toString() for st in fs.globStatus(glob) or [] if st.isDirectory()]
+    if not dirs:
+        return spark.read.parquet(path).where(F.lit(False))
+    idx = spark.read.option("basePath", path).parquet(*dirs)
     pred = reduce(
         lambda a, b: a | b,
         [

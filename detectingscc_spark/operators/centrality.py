@@ -12,13 +12,11 @@ the walk depth identically, so the two engines settle the same pairs).
 
 Scale notes: all landmark BFS waves run SIMULTANEOUSLY in one keyed
 frontier — per hop ONE shuffle (the frontier-edge join grouped by
-(lm, dst)), never one job per landmark. The settled (lm, id, dist) set
-uses the same fragment-compaction discipline as operators/bfs.py: a
-compacted base plus at most COMPACT_EVERY lazy-union fragments probed by
-anti-join, re-checkpointed every COMPACT_EVERY hops. State is
-O(landmarks × reachable vertices) rows of 3 longs — the landmark count
-is the knob that trades accuracy for state, exactly as in published
-landmark-centrality systems.
+(lm, dst)), never one job per landmark: `operators/bfs.py::reach` with
+`lm` as the carried key, its settled (lm, id, dist) set one compacting
+`Fragments` set. State is O(landmarks × reachable vertices) rows of 3
+longs — the landmark count is the knob that trades accuracy for state,
+exactly as in published landmark-centrality systems.
 """
 
 from __future__ import annotations
@@ -28,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..graph import canonical_edges, vertex_universe
 from ..plans.superstep import SuperstepRunner
+from .bfs import reach
 
 
 def landmark_distances(
@@ -43,48 +42,11 @@ def landmark_distances(
     itself). All landmarks advance in one keyed frontier."""
     runner = runner or SuperstepRunner(spark, run_id="landmarks")
     E, _ = runner.tick("edges", canonical_edges(edges), detach=False)
-
-    seed = (
-        landmarks.select(F.col("id").cast("long"))
-        .distinct()
-        .select(F.col("id").alias("lm"), F.col("id"), F.lit(0).cast("long").alias("dist"))
-    )
-    seed, f_cnt = runner.tick("settled_0", seed)
-    COMPACT_EVERY = 8
-    frag_slots: list[str] = ["settled_0"]
-    settled_view = seed
-    front = seed.select("lm", "id")
-
-    hops = 0
-    while f_cnt and hops < max_hops:
-        hops += 1
-        runner.superstep = hops
-        runner.bump("FWD_iterations")
-        reached = (
-            E.join(front.withColumnRenamed("id", "src"), "src")
-            .select("lm", F.col("dst").alias("id"))
-            .distinct()
-        )
-        new = reached.join(
-            settled_view.select("lm", "id"), ["lm", "id"], "left_anti"
-        ).withColumn("dist", F.lit(hops).cast("long"))
-        new, n_cnt = runner.tick(f"settled_{hops}", new)
-        if n_cnt == 0:
-            break
-        frag_slots.append(f"settled_{hops}")
-        settled_view = settled_view.unionByName(new)
-        if len(frag_slots) >= COMPACT_EVERY:
-            settled_view, _ = runner.tick(
-                "settled_base", settled_view, count=False, detach=False
-            )
-            for s in frag_slots[:-1]:
-                runner.release(s)
-            frag_slots = frag_slots[-1:]
-        front = new.select("lm", "id")
-        f_cnt = n_cnt
-    result = settled_view.select("lm", "id", "dist")
+    seed = landmarks.select(F.col("id").cast("long")).distinct().select(F.col("id").alias("lm"), "id")
+    settled, hops, _ = reach(runner, "settled", E, seed, max_hops, dist=True)
+    runner.bump("FWD_iterations", hops)
     runner.release("edges")
-    return result
+    return settled.view.select("lm", "id", "dist")
 
 
 def harmonic_centrality(

@@ -25,11 +25,9 @@ Superstep fixed-cost discipline (round-7, guide §2.4 — the leg was
 job-count-bound, ~85 ms of scheduling+planning per Spark job at any
 scale):
   * the round-entry residual refresh is skipped in round 1 (every vertex
-    is active — a no-op filter) and the post-trim refresh is skipped
-    when trim1 removed nothing;
-  * trim1's endpoint probes are semi-joins against the RAW src/dst
-    columns — the old per-side `.distinct()` bought nothing (the hash
-    build dedups) and cost an exchange each;
+    is active — a no-op filter); trim1 is the FB engine's
+    `scc.trim1_fixpoint` with one iteration, which skips its residual
+    refresh when it removed nothing;
   * each propagation tick is one pull-max `label_step`
     (operators/components.py, shared with WCC and the FB engine's
     decomposition): two pointer jumps FIRST, against the already-
@@ -37,13 +35,12 @@ scale):
     pull-max. Two jumps per tick triple path-shortening per round; any
     trajectory reaches the same unique fixpoint (max forward-reachable
     id), detected by the monotone color-sum observation;
-  * the class-confined BFS keeps the visited set as a lazy union of
-    materialized per-hop fragments (one tick per hop, compacted every
-    8 hops — operators/bfs.py discipline) instead of re-materializing
-    the whole visited set every hop;
-  * retired vertices accumulate as materialized `done` fragments unioned
-    once at the end (the scc.py emit_done discipline) instead of
-    rewriting the whole done set every round.
+  * the class-confined BFS is `operators/bfs.py::reach`, whose visited
+    set is a compacting `Fragments` set (plans/superstep.py): one tick
+    per hop instead of re-materializing the whole visited set every hop;
+  * retired vertices accumulate in a non-compacting `Fragments` set
+    unioned once at the end instead of rewriting the whole done set
+    every round.
 
 Same output contract as operators/scc.py; equivalence tested.
 """
@@ -54,9 +51,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..graph import canonical_edges, vertex_universe
-from ..plans.superstep import SuperstepRunner, bc, broadcastable
+from ..plans.superstep import Fragments, SuperstepRunner, bc, broadcastable, part_target
+from .bfs import reach
 from .components import label_step
-from .scc import _part_target
+from .scc import endpoint_join, trim1_fixpoint
 
 
 def scc_coloring(
@@ -75,22 +73,8 @@ def scc_coloring(
     active, a_cnt = runner.tick("active", vertex_universe(E, vertices).select("id"))
     re, re_cnt = runner.tick("re", E, detach=False)
 
-    done_frags: list[DataFrame] = []
-
-    def emit_done(new_rows: DataFrame) -> None:
-        frag, _ = runner.tick(
-            f"done_{len(done_frags)}", new_rows.select("id", "scc_id"),
-            count=False, detach=False,
-        )
-        done_frags.append(frag)
-
-    def all_done() -> DataFrame:
-        out = done_frags[0]
-        for frag in done_frags[1:]:
-            out = out.unionByName(frag)
-        return out
-
-    emit_done(spark.createDataFrame([], "id long, scc_id long"))
+    done = Fragments(runner, "done", compact=False)
+    done.add(spark.createDataFrame([], "id long, scc_id long"))
 
     rnd = 0
     while a_cnt > 0:
@@ -103,38 +87,12 @@ def scc_coloring(
         # residual edges between active vertices (round 1: every vertex is
         # active, the filter is a no-op — skip the tick entirely)
         if rnd > 1:
-            av = bc(active, a_cnt)
-            re, re_cnt = runner.tick(
-                "re",
-                re.join(av.withColumnRenamed("id", "src"), "src", "left_semi")
-                .join(av.withColumnRenamed("id", "dst"), "dst", "left_semi"),
-                detach=False,
-            )
+            re, re_cnt = runner.tick("re", endpoint_join(re, bc(active, a_cnt), "left_semi"), detach=False)
 
-        # trim1 once (vSlota style): semi-probe the raw endpoint columns
-        # (no distinct — the semi-join hash build dedups for free)
-        survivors, s_cnt = runner.tick(
-            "active_next",
-            active.join(re.select(F.col("src").alias("id")), "id", "left_semi")
-            .join(re.select(F.col("dst").alias("id")), "id", "left_semi"),
-        )
-        if s_cnt < a_cnt:
-            emit_done(
-                active.join(bc(survivors, s_cnt).select("id"), "id", "left_anti")
-                .select("id", F.col("id").alias("scc_id"))
-            )
-        runner.promote("active_next", "active")
-        trimmed = s_cnt < a_cnt
-        active, a_cnt = survivors, s_cnt
+        # trim1 once (vSlota style): the FB engine's trim with one iteration
+        active, a_cnt, re, re_cnt = trim1_fixpoint(runner, re, re_cnt, active, a_cnt, done, max_iters=1)
         if a_cnt == 0:
             break
-        if trimmed:
-            re, re_cnt = runner.tick(
-                "re",
-                re.join(bc(active, a_cnt).withColumnRenamed("id", "src"), "src", "left_semi")
-                .join(bc(active, a_cnt).withColumnRenamed("id", "dst"), "dst", "left_semi"),
-                detach=False,
-            )
 
         # ---- max-color propagation with pointer jumping ---------------
         # color(v) = max id forward-reachable: one pull-max `label_step`
@@ -149,7 +107,7 @@ def scc_coloring(
         if broadcastable(a_cnt):
             prop_re, _ = runner.tick(
                 "prop_re",
-                re.repartition(_part_target(re_cnt), "src"),
+                re.repartition(part_target(re_cnt), "src"),
                 truncate=False, count=False, detach=False,
             )
         else:
@@ -184,57 +142,27 @@ def scc_coloring(
         # persisted + partitioned by the hop dedup key (dst): while the
         # frontier broadcasts, each BFS hop's distinct is exchange-free
         ce, _ = runner.tick(
-            "ce", ce.repartition(_part_target(re_cnt), "dst"),
+            "ce", ce.repartition(part_target(re_cnt), "dst"),
             truncate=False, count=False, detach=False,
         )
-        # visited set = compacted base + materialized per-hop fragments
-        # (lazy union, one tick per hop — operators/bfs.py discipline)
-        seed, v_cnt = runner.tick(
-            "vis_0", col_df.where(F.col("label") == F.col("id")).select("id"), detach=False
+        vis, hops, left = reach(
+            runner, "vis", ce, col_df.where(F.col("label") == F.col("id")).select("id"), max_bfs_hops
         )
-        COMPACT_EVERY = 8
-        frag_slots = ["vis_0"]
-        vis_view = seed
-        front, f_cnt = seed, v_cnt
-        hops = 0
-        while f_cnt > 0:
-            hops += 1
-            if hops > max_bfs_hops:
-                raise RuntimeError("coloring BFS exceeded max hops")
-            runner.bump("BWD_iterations")
-            new = (
-                ce.join(bc(front.withColumnRenamed("id", "src"), f_cnt), "src")
-                .select(F.col("dst").alias("id"))
-                .distinct()
-                .join(bc(vis_view, v_cnt), "id", "left_anti")
-            )
-            front, f_cnt = runner.tick(f"vis_{hops}", new, detach=False)
-            if f_cnt:
-                frag_slots.append(f"vis_{hops}")
-                vis_view = vis_view.unionByName(front)
-                v_cnt += f_cnt
-                if len(frag_slots) >= COMPACT_EVERY:
-                    vis_view, _ = runner.tick(
-                        "vis_base", vis_view, count=False, detach=False
-                    )
-                    # newest fragment stays alive: it is the live frontier
-                    for s in frag_slots[:-1]:
-                        runner.release(s)
-                    frag_slots = frag_slots[-1:]
-            else:
-                runner.release(f"vis_{hops}")
-
+        if left:
+            raise RuntimeError("coloring BFS exceeded max hops")
+        runner.bump("BWD_iterations", hops)
         runner.log("class_bfs_done", hops=hops)
         # retired = visited; scc label = min member id per color class
-        retired = vis_view.join(bc(col_df, a_cnt), "id")
+        retired = vis.view.join(bc(col_df, a_cnt), "id")
         reps = retired.groupBy("label").agg(F.min("id").alias("scc_id"))
-        emit_done(retired.join(bc(reps, a_cnt), "label").select("id", "scc_id"))
-        active, a_cnt = runner.tick("active", active.join(bc(vis_view, v_cnt), "id", "left_anti"))
+        done.add(retired.join(bc(reps, a_cnt), "label").select("id", "scc_id"))
+        active, a_cnt = runner.tick("active", active.join(bc(vis.view, vis.count), "id", "left_anti"))
         runner.log("coloring_round", round=rnd, active=a_cnt, prop_iters=prev_iters, bfs_hops=hops)
-        for s in ("color", "ce", "vis_base", "prop_re", *frag_slots):
+        vis.release()
+        for s in ("color", "ce", "prop_re"):
             runner.release(s)
 
     # the result reads only the done fragments
     runner.release("active")
     runner.release("re")
-    return all_done().select(F.col("id").cast("long"), F.col("scc_id").cast("long"))
+    return done.view.select(F.col("id").cast("long"), F.col("scc_id").cast("long"))

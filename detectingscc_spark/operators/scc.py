@@ -38,12 +38,15 @@ Superstep fixed-cost discipline (the scaling-efficiency levers):
   * ONE join per BFS hop — FW/BW edges and frontiers share a dir tag,
     and each hop is materialized on its own: Spark does not reuse
     subplans, so fusing hops into one job recomputes the inner levels.
+    The hop loop is `operators/bfs.py::reach`, shared with coloring,
+    `bfs_distances` and the landmark BFS.
   * Frontier joins and visited anti-joins broadcast while the driver-
     known row count is under BROADCAST_ROW_LIMIT (plans/superstep.py);
     past it they are plain shuffle joins, and AQE skew-join splitting
     spreads hub adjacency.
-  * Retired vertices accumulate as materialized fragments; the `done`
-    set is their lazy union (no O(done) rewrite per emit).
+  * Visited and retired vertices accumulate as materialized fragments
+    of a `Fragments` set (plans/superstep.py); the `done` set is their
+    lazy union (no O(done) rewrite per emit).
   * trim1 re-derives the residual lazily per iteration and materializes
     it once per fixpoint.
 Every superstep localCheckpoints to truncate lineage and periodically
@@ -57,7 +60,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..graph import canonical_edges, vertex_universe
-from ..plans.superstep import SuperstepRunner, bc, broadcastable
+from ..plans.superstep import Fragments, SuperstepRunner, bc, broadcastable, part_target
+from .bfs import reach
 from .components import label_step
 
 # Range-finish caps, read at call time (tests patch them). A range is
@@ -211,22 +215,8 @@ def strongly_connected_components(
     # fragment avoids rewriting the whole done set on every emit — the
     # old design's O(done) localCheckpoint per trim/update was a large
     # share of the superstep fixed cost.
-    done_frags: list[DataFrame] = []
-
-    def emit_done(new_rows: DataFrame) -> None:
-        frag, _ = runner.tick(
-            f"done_{len(done_frags)}", new_rows.select("id", "scc_id"),
-            count=False, detach=False,
-        )
-        done_frags.append(frag)
-
-    def all_done() -> DataFrame:
-        out = done_frags[0]
-        for frag in done_frags[1:]:
-            out = out.unionByName(frag)
-        return out
-
-    emit_done(first_done)
+    done = Fragments(runner, "done", compact=False)
+    done.add(first_done.select("id", "scc_id"))
 
     while a_cnt > 0:
         rnd += 1
@@ -253,7 +243,7 @@ def strongly_connected_components(
         # in range 0 and the initial residual IS the canonical edge set)
         if rnd > 1 or resumed is not None:
             re, re_cnt = refresh_residual(re, active, a_cnt)
-            active, a_cnt, re, re_cnt = _finish_ranges(runner, re, re_cnt, active, a_cnt, emit_done)
+            active, a_cnt, re, re_cnt = _finish_ranges(runner, re, re_cnt, active, a_cnt, done)
             if a_cnt == 0:
                 break
 
@@ -268,16 +258,16 @@ def strongly_connected_components(
 
         # ---- trim1 (bounded fixpoint; stragglers become singleton
         # ranges and retire via later pivots — correctness unaffected) --
-        active, a_cnt, re, re_cnt = _trim1_fixpoint(
-            runner, re, re_cnt, active, a_cnt, emit_done, trim_iters
+        active, a_cnt, re, re_cnt = trim1_fixpoint(
+            runner, re, re_cnt, active, a_cnt, done, trim_iters
         )
         if a_cnt == 0:
             break
         if trim2_enabled:
-            active, a_cnt, re, re_cnt, fired = _trim2(runner, re, re_cnt, active, a_cnt, emit_done)
+            active, a_cnt, re, re_cnt, fired = _trim2(runner, re, re_cnt, active, a_cnt, done)
             if fired and a_cnt > 0:
-                active, a_cnt, re, re_cnt = _trim1_fixpoint(
-                    runner, re, re_cnt, active, a_cnt, emit_done, trim_iters
+                active, a_cnt, re, re_cnt = trim1_fixpoint(
+                    runner, re, re_cnt, active, a_cnt, done, trim_iters
                 )
             if a_cnt == 0:
                 break
@@ -321,7 +311,7 @@ def strongly_connected_components(
         # ---- update: FW∩BW = pivot's SCC; survivors re-ranged ---------
         in_scc = state.where(F.col("fw") & F.col("bw"))
         reps = in_scc.groupBy("range").agg(F.min("id").alias("scc_id"))
-        emit_done(in_scc.join(bc(reps, p_cnt), "range").select("id", "scc_id"))
+        done.add(in_scc.join(bc(reps, p_cnt), "range").select("id", "scc_id"))
 
         surv = state.where(~(F.col("fw") & F.col("bw"))).withColumn(
             "sub", F.when(F.col("fw"), 1).when(F.col("bw"), 2).otherwise(0)
@@ -333,14 +323,14 @@ def strongly_connected_components(
         active, a_cnt = runner.tick("active", active)
         runner.log("update", active=a_cnt)
 
-        runner.maybe_checkpoint({"active": active, "done": all_done(), "re": re})
+        runner.maybe_checkpoint({"active": active, "done": done.view, "re": re})
         runner.release("pivots")
 
-    runner.maybe_checkpoint({"active": active, "done": all_done(), "re": re}, force=True)
+    runner.maybe_checkpoint({"active": active, "done": done.view, "re": re}, force=True)
     # the result reads only the done fragments
     for slot in ("active", "re", "state"):
         runner.release(slot)
-    return all_done().select(F.col("id").cast("long"), F.col("scc_id").cast("long"))
+    return done.view.select(F.col("id").cast("long"), F.col("scc_id").cast("long"))
 
 
 def _emptied(df: DataFrame) -> DataFrame:
@@ -348,7 +338,18 @@ def _emptied(df: DataFrame) -> DataFrame:
     return df.where(F.lit(False))
 
 
-def _finish_ranges(runner, re, re_cnt, active, a_cnt, emit_done):
+def endpoint_join(edges: DataFrame, ids: DataFrame, how: str) -> DataFrame:
+    """The `edges` rows with both endpoints in `ids(id, ...)` (how=
+    "left_semi") or neither (how="left_anti"), in `edges`' column order."""
+    ids = ids.select("id")
+    return (
+        edges.join(ids.withColumnRenamed("id", "src"), "src", how)
+        .join(ids.withColumnRenamed("id", "dst"), "dst", how)
+        .select(*edges.columns)
+    )
+
+
+def _finish_ranges(runner, re, re_cnt, active, a_cnt, done):
     """Retire every range within FINISH_MAX_EDGES / FINISH_MAX_VERTS in
     ONE executor-side Tarjan job (`tarjan_groups` keyed by range). When
     all of them are edgeless (the usual round 2 on the corpus graphs:
@@ -373,9 +374,9 @@ def _finish_ranges(runner, re, re_cnt, active, a_cnt, emit_done):
     if fin_v:
         keys = bc(small, s_cnt)
         if fin_e:
-            emit_done(tarjan_groups(re, active, keys, "range"))
+            done.add(tarjan_groups(re, active, keys, "range"))
         else:
-            emit_done(active.join(keys, "range", "left_semi").select("id", F.col("id").alias("scc_id")))
+            done.add(active.join(keys, "range", "left_semi").select("id", F.col("id").alias("scc_id")))
         runner.log("finish_ranges", ranges=s_cnt, vertices=fin_v, edges=fin_e)
         if fin_v == a_cnt:
             active, re = _emptied(active), _emptied(re)
@@ -404,25 +405,12 @@ def _assemble_state(runner, state, vis_f, vis_b, vis_cnt):
     return out
 
 
-def _part_target(rows: int | None) -> int:
-    """Partition count sized by DATA VOLUME (~16MB of 24-byte rows each),
-    capped at the session's shuffle parallelism — cached iterative state
-    should never carry core-count partitions when the bytes don't warrant
-    them (the tiny-task flood is pure scheduler overhead at any cluster
-    size)."""
-    if rows is None:
-        return 1
-    spark = SparkSession.getActiveSession()
-    cap = int(spark.conf.get("spark.sql.shuffle.partitions", "32")) if spark else 32
-    return max(1, min(cap, (rows * 24) // (16 << 20) + 1))
-
-
 def _bfs_join(runner, re_f, re_cnt, state, max_bfs_hops, n_active):
-    """Single-job bidirectional frontier BFS.
+    """Bidirectional frontier BFS: ONE `reach` over FW and BW edges.
 
     FW and BW edges are unioned into ONE frame tagged `dir` (0=fwd edge
-    (src->dst), 1=bwd edge (dst->src)); the frontier carries the same tag,
-    so both directions advance in ONE join per hop, and each hop is one
+    (src->dst), 1=bwd edge (dst->src)); the seeds carry the same tag, so
+    both directions advance in ONE join per hop, and each hop is one
     materialized level — the next frontier.
 
     While the frontier is broadcast-able the join is a map-side hash join
@@ -431,21 +419,21 @@ def _bfs_join(runner, re_f, re_cnt, state, max_bfs_hops, n_active):
     over several tasks (the Spark analog of the reference dispatching
     warp/CTA kernels for high-degree vertices,
     /root/reference/include/scc_kernels.h:46-105)."""
-    ed = re_f.select(F.lit(0).alias("dir"), F.col("src").alias("u"), F.col("dst").alias("v")).unionByName(
-        re_f.select(F.lit(1).alias("dir"), F.col("dst").alias("u"), F.col("src").alias("v"))
+    ed = re_f.select(F.lit(0).alias("dir"), "src", "dst").unionByName(
+        re_f.select(F.lit(1).alias("dir"), F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
     # While the frontier stays broadcast-able (bounded by the active
     # count), every hop's joins are broadcast-hash and the only exchange
     # left is the frontier dedup — so partition the cached edge frame by
-    # the DEDUP key (dir, v): persist (unlike localCheckpoint) preserves
+    # the DEDUP key (dir, dst): persist (unlike localCheckpoint) preserves
     # the partitioning, the broadcast join and the select carry it
     # through, and the per-hop distinct becomes exchange-free. Past the
-    # broadcast regime the hops are shuffle joins on (dir, u) and key
+    # broadcast regime the hops are shuffle joins on (dir, src) and key
     # partitioning buys nothing — keep the byte-sized coalesce so per-hop
     # scans cost O(data) tasks.
-    n_parts_ed = _part_target(2 * re_cnt if re_cnt else None)
+    n_parts_ed = part_target(2 * re_cnt if re_cnt else None)
     if broadcastable(n_active):
-        ed = ed.repartition(n_parts_ed, "dir", "v")
+        ed = ed.repartition(n_parts_ed, "dir", "dst")
     else:
         ed = ed.coalesce(n_parts_ed)
     ed, _ = runner.tick(
@@ -456,52 +444,23 @@ def _bfs_join(runner, re_f, re_cnt, state, max_bfs_hops, n_active):
     seeds = state.where("fw").select(F.lit(0).alias("dir"), "id").unionByName(
         state.where("bw").select(F.lit(1).alias("dir"), "id")
     )
-    front, cnt = runner.tick("bfs_front", seeds, detach=False)
-    # visited set = one compacted base + up to COMPACT_EVERY materialized
-    # per-hop fragments (lazy union). ONE tick per hop; the base is
-    # re-checkpointed only at compaction, not every hop.
-    COMPACT_EVERY = 8
-    vis, vis_cnt = front, cnt
-    frag_slots: list[str] = []
-    hops = 0
-    while cnt > 0:
-        if hops >= max_bfs_hops:
-            raise RuntimeError("BFS exceeded max hops")
-        hops += 1
-        runner.bump("FWD_iterations")
-        runner.bump("BWD_iterations")
-        level = (
-            ed.join(bc(front.withColumnRenamed("id", "u"), cnt), ["dir", "u"])
-            .select("dir", F.col("v").alias("id"))
-            .distinct()
-            .join(bc(vis, vis_cnt), ["dir", "id"], "left_anti")
-        )
-        front, cnt = runner.tick(f"bfs_new_{hops}", level, detach=False)
-        if cnt:
-            frag_slots.append(f"bfs_new_{hops}")
-            vis = vis.unionByName(front)
-            vis_cnt += cnt
-            if len(frag_slots) >= COMPACT_EVERY:
-                vis, _ = runner.tick("bfs_vis", vis, count=False, detach=False)
-                # newest fragment stays alive: it is the live frontier for
-                # the next hop's join (its blocks must not be dropped)
-                for s in frag_slots[:-1]:
-                    runner.release(s)
-                frag_slots = frag_slots[-1:]
-        else:
-            runner.release(f"bfs_new_{hops}")
+    vis, hops, left = reach(runner, "bfs", ed, seeds, max_bfs_hops)
+    if left:
+        raise RuntimeError("BFS exceeded max hops")
+    runner.bump("FWD_iterations", hops)
+    runner.bump("BWD_iterations", hops)
     final = _assemble_state(
         runner, state,
-        vis.where("dir = 0").select("id"),
-        vis.where("dir = 1").select("id"),
-        vis_cnt,
+        vis.view.where("dir = 0").select("id"),
+        vis.view.where("dir = 1").select("id"),
+        vis.count,
     )
-    for slot in ["bfs_ed", "bfs_front", "bfs_vis"] + frag_slots:
-        runner.release(slot)
+    vis.release()
+    runner.release("bfs_ed")
     return final, hops
 
 
-def _trim1_fixpoint(runner, re, re_cnt, active, a_cnt, emit_done, max_iters=4):
+def trim1_fixpoint(runner, re, re_cnt, active, a_cnt, done, max_iters=4):
     """Iteratively retire vertices with zero residual in- or out-edges
     (singleton SCCs) — reference trim1,
     /root/reference/src/scc_kernels.cu:187-233. Bounded at max_iters per
@@ -520,13 +479,7 @@ def _trim1_fixpoint(runner, re, re_cnt, active, a_cnt, emit_done, max_iters=4):
     while a_cnt > 0 and iters < max_iters:
         iters += 1
         runner.bump("Trimm_iterations")
-        if trimmed_any:
-            sv = bc(active, a_cnt).select("id")
-            cur = re0.join(sv.withColumnRenamed("id", "src"), "src", "left_semi").join(
-                sv.withColumnRenamed("id", "dst"), "dst", "left_semi"
-            )
-        else:
-            cur = re0
+        cur = endpoint_join(re0, bc(active, a_cnt), "left_semi") if trimmed_any else re0
         # raw endpoint columns: the semi-join hash build dedups, so the
         # old per-side .distinct() only added an exchange each
         has_out = cur.select(F.col("src").alias("id"))
@@ -539,25 +492,20 @@ def _trim1_fixpoint(runner, re, re_cnt, active, a_cnt, emit_done, max_iters=4):
             trimmed = active.join(bc(survivors, s_cnt).select("id"), "id", "left_anti").select(
                 "id", F.col("id").alias("scc_id")
             )
-            emit_done(trimmed)
+            done.add(trimmed)
             trimmed_any = True
         runner.promote("active_next", "active")
         active, a_cnt = survivors, s_cnt
         if trimmed_cnt == 0:
             break
-    if trimmed_any:
-        sv = bc(active, a_cnt).select("id")
-        re, re_cnt = runner.tick(
-            "re",
-            re0.join(sv.withColumnRenamed("id", "src"), "src", "left_semi").join(
-                sv.withColumnRenamed("id", "dst"), "dst", "left_semi"
-            ).select("src", "dst", "range"),
-            detach=False,
-        )
+    if trimmed_any and a_cnt:
+        re, re_cnt = runner.tick("re", endpoint_join(re0, bc(active, a_cnt), "left_semi"), detach=False)
+    elif trimmed_any:
+        re, re_cnt = _emptied(re0), 0
     return active, a_cnt, re, re_cnt
 
 
-def _trim2(runner, re, re_cnt, active, a_cnt, emit_done):
+def _trim2(runner, re, re_cnt, active, a_cnt, done):
     """Retire 2-cycle SCCs {u,k} where each is the other's only residual
     in-neighbor (or only out-neighbor) — reference trim2,
     /root/reference/src/scc_kernels.cu:236-357. scc_id = min(u,k)."""
@@ -590,17 +538,10 @@ def _trim2(runner, re, re_cnt, active, a_cnt, emit_done):
         pairs.select(F.col("k").alias("id"), F.col("u").alias("scc_id"))
     ).distinct()
     retired, r_cnt = runner.tick("t2retired", retired)
-    emit_done(retired)
+    done.add(retired)
     active, a_cnt = runner.tick("active_next", active.join(bc(retired, r_cnt).select("id"), "id", "left_anti"))
     runner.promote("active_next", "active")
-    rt = bc(retired, r_cnt).select("id")
-    re, re_cnt = runner.tick(
-        "re",
-        re.join(rt.withColumnRenamed("id", "src"), "src", "left_anti").join(
-            rt.withColumnRenamed("id", "dst"), "dst", "left_anti"
-        ).select("src", "dst", "range"),
-        detach=False,
-    )
+    re, re_cnt = runner.tick("re", endpoint_join(re, bc(retired, r_cnt), "left_anti"), detach=False)
     runner.log("trim2", retired=r_cnt, active=a_cnt)
     runner.release("t2pairs")
     runner.release("t2retired")

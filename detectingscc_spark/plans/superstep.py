@@ -63,6 +63,24 @@ def bc(df: DataFrame, cnt: int | None) -> DataFrame:
     return F.broadcast(df) if broadcastable(cnt) else df
 
 
+def part_target(rows: int | None) -> int:
+    """Partition count sized by DATA VOLUME (~16MB of 24-byte rows each),
+    capped at the session's shuffle parallelism — cached iterative state
+    should never carry core-count partitions when the bytes don't warrant
+    them (the tiny-task flood is pure scheduler overhead at any cluster
+    size)."""
+    if rows is None:
+        return 1
+    spark = SparkSession.getActiveSession()
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions", "32")) if spark else 32
+    return max(1, min(cap, (rows * 24) // (16 << 20) + 1))
+
+
+# Live fragments at which a compacting `Fragments` set is re-materialized
+# as one base, so a deep BFS never carries a hop-count-deep union.
+COMPACT_EVERY = 8
+
+
 class SuperstepRunner:
     """Manages persisted state + metrics + durable checkpoints for one
     iterative algorithm run."""
@@ -257,6 +275,7 @@ class SuperstepRunner:
         for name in list(self._live):
             self.release(name)
 
+
     # ---- metrics -----------------------------------------------------
 
     def log(self, phase: str, **kv) -> None:
@@ -351,3 +370,57 @@ class SuperstepRunner:
             self.counters.update(manifest.get("counters", {}))
             return step, states
         return None
+
+
+class Fragments:
+    """A growing row set held as materialized fragments: each `add` ticks
+    one fragment as slot `<name>_<i>` (i counts the adds), `view` is the
+    lazy union of the live ones and `count` their running row count.
+    Appending a small fragment never rewrites the whole set.
+
+    A fragment known to be empty is released and left out of the view,
+    unless it is the first (the view needs a schema). With `compact`, a
+    set of COMPACT_EVERY live fragments is re-materialized as slot
+    `<name>_base` and every fragment but the newest is released; the
+    newest stays live because it is the frontier a BFS joins next. A set
+    read only at checkpoints and at return (an SCC engine's `done` set)
+    turns `compact` off: its fragments are neither compacted nor counted,
+    which would add work and save none. detach=False throughout: the set
+    only grows by unions, whose statistics compound additively
+    (SuperstepRunner.tick)."""
+
+    def __init__(self, runner: SuperstepRunner, name: str, compact: bool = True):
+        self.runner = runner
+        self.name = name
+        self.compact = compact
+        self.view: DataFrame | None = None
+        self.count = 0
+        self._adds = 0
+        self._slots: list[str] = []
+
+    def add(self, df: DataFrame) -> tuple[DataFrame, int | None]:
+        """Materialize `df` as the next fragment; returns (fragment, rows),
+        rows None when the set does not compact."""
+        slot = f"{self.name}_{self._adds}"
+        self._adds += 1
+        frag, cnt = self.runner.tick(slot, df, count=self.compact, detach=False)
+        if cnt == 0 and self.view is not None:
+            self.runner.release(slot)
+            return frag, cnt
+        self._slots.append(slot)
+        self.view = frag if self.view is None else self.view.unionByName(frag)
+        if self.compact:
+            self.count += cnt
+            if len(self._slots) >= COMPACT_EVERY:
+                self.view, _ = self.runner.tick(
+                    f"{self.name}_base", self.view, count=False, detach=False
+                )
+                for s in self._slots[:-1]:
+                    self.runner.release(s)
+                self._slots = self._slots[-1:]
+        return frag, cnt
+
+    def release(self) -> None:
+        for s in (f"{self.name}_base", *self._slots):
+            self.runner.release(s)
+        self._slots = []

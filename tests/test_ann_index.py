@@ -70,6 +70,28 @@ def test_lsh_indexed_matches_recompute_and_prunes(spark, tmp_path):
     assert len(read_files) < len(all_files), "probe scanned the whole index"
 
 
+def test_lsh_pruned_scan_lists_probed_dirs_of_a_uri(spark, tmp_path):
+    """A file:// URI takes the same pruned listing as a local path: the
+    scan's input files all lie under a probed tbl=/bucket= directory."""
+    from detectingscc_spark.functions.ann_index import pruned_lsh_scan
+
+    rows = [(t, b, 10 * t + b, [1.0, float(b)], 1.0) for t in range(2) for b in range(4)]
+    root = tmp_path / "lsh_2x4"
+    (
+        spark.createDataFrame(rows, "tbl int, bucket int, vec_id long, v array<double>, norm double")
+        .write.partitionBy("tbl", "bucket")
+        .parquet(str(root))
+    )
+    pairs = [(0, 1), (1, 2), (1, 3)]
+    scan = pruned_lsh_scan(spark, root.as_uri(), pairs)
+    files = scan.inputFiles()
+    assert files
+    for f in files:
+        m = re.search(r"tbl=(\d+)/bucket=(\d+)/", f)
+        assert m and (int(m.group(1)), int(m.group(2))) in pairs, f"file outside probed buckets: {f}"
+    assert sorted(r["vec_id"] for r in scan.collect()) == [1, 12, 13]
+
+
 def test_ivf_indexed_matches_recompute_and_prunes(spark, tmp_path):
     from detectingscc_spark.functions.ann_index import (
         ann_topk_ivf_indexed,

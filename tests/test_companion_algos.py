@@ -10,6 +10,7 @@ from detectingscc_spark.operators.components import connected_components
 from detectingscc_spark.operators.lpa import label_propagation
 from detectingscc_spark.operators.pagerank import pagerank
 from detectingscc_spark.operators.triangles import triangle_count, triangle_count_per_vertex
+from detectingscc_spark.plans.superstep import SuperstepRunner
 from detectingscc_spark.sources.gtgraph import gtgraph_meta, read_gtgraph
 
 from .conftest import FIXTURE_DATA
@@ -143,18 +144,102 @@ def test_bfs_distances_vs_python(spark, g128):
     assert got == bfs_dist(erows, sources)
 
 
-def test_bfs_deep_path_compacts(spark):
-    """A 60-hop path exercises the settled-fragment compaction (several
-    COMPACT_EVERY=8 cycles): distances must stay exact and the run must
-    not blow up its plan with a hop-count-deep union (the round-3 shape
-    the compaction replaces)."""
+class _SlotLog(SuperstepRunner):
+    """A runner that records the slot name of every tick."""
+
+    def __init__(self, spark):
+        super().__init__(spark)
+        self.slots: list[str] = []
+
+    def tick(self, name, df, **kwargs):
+        self.slots.append(name)
+        return super().tick(name, df, **kwargs)
+
+
+def _bfs(spark, edges, runner, hops):
     from detectingscc_spark.operators.bfs import bfs_distances
 
-    v = 61  # path 1 -> 2 -> ... -> 61: 60 hops from the single source
-    edges = spark.createDataFrame([(i, i + 1) for i in range(1, v)], "src long, dst long")
-    sdf = spark.createDataFrame([(1,)], "id long")
-    got = {r["id"]: r["dist"] for r in bfs_distances(spark, edges, sdf, max_hops=64).collect()}
-    assert got == {i: i - 1 for i in range(1, v + 1)}
+    src = spark.createDataFrame([(1,)], "id long")
+    out = bfs_distances(spark, edges, src, max_hops=hops, runner=runner)
+    return {r["id"]: r["dist"] for r in out.collect()}
+
+
+def _landmarks(spark, edges, runner, hops):
+    from detectingscc_spark.operators.centrality import landmark_distances
+
+    lm = spark.createDataFrame([(1,)], "id long")
+    rows = landmark_distances(spark, edges, lm, max_hops=hops, runner=runner).collect()
+    assert {r["lm"] for r in rows} == {1}
+    return {r["id"]: r["dist"] for r in rows}
+
+
+def _fb(spark, edges, runner, hops):
+    from detectingscc_spark.operators.scc import strongly_connected_components
+
+    out = strongly_connected_components(spark, edges, runner=runner, max_bfs_hops=hops)
+    return {r["id"]: r["scc_id"] for r in out.collect()}
+
+
+def _coloring(spark, edges, runner, hops):
+    from detectingscc_spark.operators.coloring import scc_coloring
+
+    out = scc_coloring(spark, edges, runner=runner, max_bfs_hops=hops)
+    return {r["id"]: r["scc_id"] for r in out.collect()}
+
+
+# every caller of `operators/bfs.py::reach`: (run, the visited set's slot
+# name, SCC engine?). BFS and landmarks walk the path 1 -> ... -> 61; the
+# SCC engines a 61-cycle, whose one SCC their BFS covers in 60 hops
+REACH_CALLERS = {
+    "bfs_distances": (_bfs, "settled", False),
+    "landmark_distances": (_landmarks, "settled", False),
+    "strongly_connected_components": (_fb, "bfs", True),
+    "scc_coloring": (_coloring, "vis", True),
+}
+DEEP_V = 61
+
+
+def _deep_graph(spark, cycle):
+    erows = [(i, i + 1) for i in range(1, DEEP_V)] + ([(DEEP_V, 1)] if cycle else [])
+    return spark.createDataFrame(erows, "src long, dst long"), erows
+
+
+@pytest.mark.parametrize("caller", sorted(REACH_CALLERS))
+def test_bfs_deep_path_compacts(spark, caller):
+    """A 60-hop walk compacts the visited set 7+ times (every
+    COMPACT_EVERY=8 live fragments), the results stay exact, and only
+    the frames the result reads stay live: the empty last hop's slot is
+    released, and an SCC engine keeps only its `done_*` fragments."""
+    from .oracles import bfs_dist, kosaraju_scc
+
+    run, name, is_scc = REACH_CALLERS[caller]
+    edges, erows = _deep_graph(spark, cycle=is_scc)
+    runner = _SlotLog(spark)
+    got = run(spark, edges, runner, 10_000 if is_scc else 64)
+    if is_scc:
+        assert got == kosaraju_scc(erows, list(range(1, DEEP_V + 1)))
+        assert [s for s in runner._live if not s.startswith("done_")] == []
+    else:
+        assert got == bfs_dist(erows, [1])
+        # hops 1..60 found vertices; hop 61 found none and is not live
+        assert f"{name}_{DEEP_V}" in runner.slots
+        assert f"{name}_{DEEP_V}" not in runner._live
+    assert runner.slots.count(f"{name}_base") >= 7
+
+
+@pytest.mark.parametrize("caller", sorted(REACH_CALLERS))
+def test_reach_max_hops_guard(spark, caller):
+    """Past `max_hops` BFS and landmarks stop at the distances they
+    settled; the SCC engines raise, since a partial visited set would
+    split an SCC silently."""
+    run, _, is_scc = REACH_CALLERS[caller]
+    edges, _ = _deep_graph(spark, cycle=is_scc)
+    runner = SuperstepRunner(spark)
+    if is_scc:
+        with pytest.raises(RuntimeError, match="exceeded max hops"):
+            run(spark, edges, runner, 8)
+    else:
+        assert run(spark, edges, runner, 8) == {i: i - 1 for i in range(1, 10)}
 
 
 def test_ppr_isolated_source_no_mass_leak(spark, g128):

@@ -1,7 +1,7 @@
 """Per-phase table of a Spark event log: `python3 tools/phases.py EVENT_LOG`.
 
 The engine tags the jobs of each `SuperstepRunner.tick` `phase:<run_id>/<slot
-stem>` (`bfs_new_7` -> `bfs_new`), of checkpoints `phase:<run_id>/checkpoint`
+stem>` (`bfs_7` -> `bfs`), of checkpoints `phase:<run_id>/checkpoint`
 and of resumes `.../resume`. Per tag: jobs, tasks, shuffle bytes, executor
 run time and job time (the sum of JobStart->JobEnd spans); then `(untagged)`
 and the tagged share of jobs and job time, overall and per job group. Spark
