@@ -17,7 +17,7 @@ small; only the intermediate reach frame grows.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.superstep import SuperstepRunner
@@ -51,8 +51,7 @@ def transitive_closure(
             .select("src", F.col("dst2").alias("dst"))
         )
         nxt = r.unionAll(comp).distinct()
-        nxt, n_next = runner.tick("reach_next", nxt)
-        runner.promote("reach_next", "reach")
+        nxt, n_next = runner.tick("reach", nxt)
         converged = n_next == n
         r, n = nxt, n_next
         if converged:
@@ -120,7 +119,7 @@ def dag_layers(
     layers = universe.withColumn("layer", F.lit(0).cast("long"))
     layers, _ = runner.tick("layers", layers)
     # Σ layer is strictly monotone under relaxation, so the convergence
-    # probe rides as one scalar agg instead of a row-diff join
+    # probe rides as an observed metric of the layers tick's own job
     prev_sum = 0
     for i in range(max_rounds):
         runner.superstep = i + 1
@@ -134,13 +133,12 @@ def dag_layers(
             layers.join(cand, "id", "left")
             .select("id", F.greatest(F.col("layer"), F.coalesce(F.col("cand"), F.lit(0))).alias("layer"))
         )
-        nxt, _ = runner.tick("layers_next", nxt, count=False)
-        runner.promote("layers_next", "layers")
-        cur_sum = nxt.agg(F.sum("layer")).first()[0] or 0
-        converged = cur_sum == prev_sum
-        layers, prev_sum = nxt, cur_sum
-        if converged:
+        obs = Observation()
+        layers, _ = runner.tick("layers", nxt.observe(obs, F.sum("layer").alias("s")), count=False)
+        cur_sum = obs.get["s"] or 0
+        if cur_sum == prev_sum:
             break
+        prev_sum = cur_sum
     else:
         raise RuntimeError(
             f"dag_layers: no fixpoint within max_rounds={max_rounds} "

@@ -58,8 +58,7 @@ def kcore(
         runner.superstep = i + 1
         runner.bump("iterations")
         survivors = undirected_degrees(resid).where(F.col("deg") >= k).select("id")
-        survivors, n_next = runner.tick("alive_next", survivors)
-        runner.promote("alive_next", "alive")
+        survivors, n_next = runner.tick("alive", survivors)
         converged = n_next == n_alive
         alive, n_alive = survivors, n_next
         if rounds is None and converged:
@@ -77,8 +76,7 @@ def kcore(
         # detach=False: the residual is a large edge frame whose stats
         # compound additively (semi-join shrink), same as the und tick —
         # the Row round trip is for multiplicative-stats state frames
-        resid, _ = runner.tick("resid_next", nxt, count=False, detach=False)
-        runner.promote("resid_next", "resid")
+        resid, _ = runner.tick("resid", nxt, count=False, detach=False)
     else:
         if rounds is None:
             raise RuntimeError(f"kcore: no fixpoint within max_rounds={max_rounds}")

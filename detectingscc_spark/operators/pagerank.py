@@ -1,25 +1,118 @@
-"""PageRank as iterative DataFrame supersteps (north_rule companion
-algorithm; absent from the reference — SURVEY.md §2.11).
+"""PageRank and personalized PageRank as one power-iteration loop of
+DataFrame supersteps (north_rule companion algorithm; absent from the
+reference — SURVEY.md §2.11).
 
-rank_{t+1}(v) = (1-d)/N + d * (Σ_{u→v} rank_t(u)/outdeg(u) + dangling_t/N)
+rank_{t+1}(v) = teleport(v) + d * (Σ_{u→v} rank_t(u)/outdeg(u) + dangling share)
 
-Dangling mass (vertices with outdeg 0) is redistributed uniformly, so
-Σ rank = 1 at every step. Converges to allclose(1e-6) vs a dense numpy
-power-iteration oracle (tests/test_pagerank.py).
+Both operators build a vertex frame (id, p, dang) — p the start rank and
+restart distribution, dang the no-out-edge marker — and run `_iterate`,
+the one loop; they differ only in its teleport expression. Dangling mass
+(vertices with outdeg 0) is redistributed by p, so Σ rank = 1 at every
+step. Converges to allclose(1e-6) vs a dense numpy power-iteration
+oracle (tests/test_companion_algos.py).
 
-Scale notes: `contrib` is the one shuffle per iteration (groupBy dst);
-edges are pre-partitioned by src and carry out_deg folded in so each
-iteration joins rank (N rows) once with edges and aggregates. Dangling
-mass is a scalar agg. Lineage truncated per iteration via the runner.
+`push` is the one sparse matrix application, shared with HITS, SALSA
+and eigenvector centrality (operators/hits.py): a join of the state
+with the keyed edges and one aggregation, the one shuffle of an
+iteration. `out_degree_fold` folds 1/outdeg(src) into the edge table
+once, so an iteration never joins the degrees. Dangling mass is a
+scalar agg in the same plan. Lineage is truncated per iteration by the
+runner's tick.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..graph import canonical_edges, vertex_universe
 from ..plans.superstep import SuperstepRunner, bc
+
+
+def push(
+    edges: DataFrame,
+    x: DataFrame,
+    n: int,
+    key_in: str,
+    key_out: str,
+    weight: str | None = None,
+    total: DataFrame | None = None,
+) -> DataFrame:
+    """One lazy matrix application: (id, s) with s(v) = Σ x(u) [/ t] [· w]
+    over the rows of `edges` whose `key_in` is u and `key_out` is v.
+
+    x(id, s) is the state; it is broadcast-hinted from `n`, the
+    driver-known bound on its rows (past the limit only x is shuffled,
+    the edges stay keyed). `weight` names an edge column w. `total` is a
+    1-row frame (t), a carried normalizer: each term is divided by t
+    before the weight multiplies it. Only vertices that receive a term
+    have a row."""
+    j = edges.join(bc(x, n).withColumnRenamed("id", key_in), key_in)
+    s = F.col("s")
+    if total is not None:
+        j = j.crossJoin(F.broadcast(total))
+        s = s / F.col("t")
+    if weight is not None:
+        s = s * F.col(weight)
+    return j.groupBy(F.col(key_out).alias("id")).agg(F.sum(s).alias("s"))
+
+
+def out_degree_fold(E: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The out-degree fold: (E(src, dst) plus w = 1/outdeg(src),
+    has_out(id, has_out) over the vertices with an out-edge). Every row
+    of E counts toward the degree."""
+    outdeg = E.groupBy("src").count().select(F.col("src").alias("id"), F.col("count").alias("od"))
+    Ew = E.join(outdeg, E["src"] == outdeg["id"]).select("src", "dst", (F.lit(1.0) / F.col("od")).alias("w"))
+    return Ew, outdeg.select("id", F.lit(True).alias("has_out"))
+
+
+def _dangling() -> Column:
+    """`dang` of a vertex frame left-joined with out_degree_fold's has_out."""
+    return F.coalesce(~F.col("has_out"), F.lit(True)).alias("dang")
+
+
+def _iterate(runner, Ew, vp, n, teleport, iters, tol=None) -> DataFrame:
+    """The one PageRank loop over the vertex frame vp(id, p, dang) of `n`
+    rows, which reads the runner's "verts" slot, and the weighted edges
+    Ew(src, dst, w). Rank starts at p; each superstep is
+    rank = teleport(c, dm) over vp's columns, with c the pushed rank
+    (0.0 where none arrives) and dm the dangling mass. With `tol` the
+    loop also stops once no rank moved by `tol` or more. Releases the
+    slots it reads; returns (id, rank)."""
+    Ew = runner.keyed_edges("edges", Ew, "dst", "src", n)
+    rank, _ = runner.tick("rank", vp.select("id", F.col("p").alias("rank"), "dang"))
+    for i in range(iters):
+        runner.superstep = i + 1
+        runner.bump("iterations")
+        # dangling mass folded into the same plan as a broadcast 1-row
+        # cross join -> ONE driver action per iteration
+        dm = rank.where(F.col("dang")).agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm"))
+        c = push(Ew, rank.select("id", F.col("rank").alias("s")), n, "src", "dst", "w")
+        nxt = (
+            vp.join(bc(c, n), "id", "left")
+            .crossJoin(F.broadcast(dm))
+            .select("id", teleport(F.coalesce(F.col("s"), F.lit(0.0)), F.col("dm")).alias("rank"), "dang")
+        )
+        if tol is None:
+            rank, _ = runner.tick("rank", nxt, count=False)
+        else:
+            # the delta reads the old rank, so it stays live until promoted
+            nxt, _ = runner.tick("rank_next", nxt, count=False)
+            delta = (
+                nxt.select("id", "rank")
+                .join(rank.select("id", F.col("rank").alias("prev")), "id")
+                .agg(F.max(F.abs(F.col("rank") - F.col("prev"))))
+                .first()[0]
+            )
+            runner.log("pagerank_iter", delta=float(delta))
+            runner.promote("rank_next", "rank")
+            rank = nxt
+            if delta < tol:
+                break
+        runner.maybe_checkpoint({"rank": rank})
+    for s in ("verts", "edges"):
+        runner.release(s)
+    return rank.select("id", "rank")
 
 
 def pagerank(
@@ -35,82 +128,23 @@ def pagerank(
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Return (id: long, rank: double). Duplicate edges count once
-    (graph semantics follow the SCC engine: dedup, keep self-loops out)."""
+    (graph semantics follow the SCC engine: dedup, keep self-loops out).
+
+    Teleport (1-d)/N to every vertex, dangling mass shared uniformly:
+    rank_{t+1}(v) = (1-d)/N + d * (c(v) + dangling_t/N)."""
     runner = runner or SuperstepRunner(spark, checkpoint_dir=checkpoint_dir, run_id="pagerank")
     E = canonical_edges(edges)
-    verts = vertex_universe(E, vertices)
-    outdeg = E.groupBy("src").count().select(F.col("src").alias("id"), F.col("count").alias("od"))
-    # fold the dangling marker into the vertex frame ONCE: the per-
-    # iteration dangling-mass sum becomes a filter over the rank state
-    # (same rows in the same stream order as the old semi-join — the
-    # summed doubles are identical) instead of a join per iteration
-    verts = verts.join(
-        outdeg.select("id", F.lit(True).alias("has_out")), "id", "left"
-    ).select("id", F.coalesce(F.col("has_out"), F.lit(False)).alias("has_out"))
-    verts = verts.select("id", (~F.col("has_out")).alias("dang"))
+    Ew, has_out = out_degree_fold(E)
+    verts = vertex_universe(E, vertices).join(has_out, "id", "left").select("id", _dangling())
     verts, n = runner.tick("verts", verts, detach=False)
+    vp = verts.select("id", (F.lit(1.0) / F.lit(n)).alias("p"), "dang")
 
-    # fold outdeg into the edge table once: each edge carries 1/outdeg(src);
-    # the contrib join is on src and its aggregation groups by dst
-    Ew = E.join(outdeg, E["src"] == outdeg["id"]).select("src", "dst", (F.lit(1.0) / F.col("od")).alias("w"))
-    Ew = runner.keyed_edges("edges", Ew, "dst", "src", n)
+    def teleport(c, dm):
+        return F.lit((1.0 - damping) / n) + F.lit(damping) * (c + dm / F.lit(float(n)))
 
-    rank = verts.select("id", (F.lit(1.0) / F.lit(n)).alias("rank"), "dang")
-    rank, _ = runner.tick("rank", rank)
-
-    iters = fixed_iters if fixed_iters is not None else max_iters
-    for i in range(iters):
-        runner.superstep = i + 1
-        runner.bump("iterations")
-        # dangling mass folded into the same plan as a broadcast 1-row
-        # cross join -> ONE job per iteration instead of three
-        dm = (
-            rank.where(F.col("dang"))
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm"))
-        )
-        # rank side broadcast-hinted from the driver-known vertex count;
-        # past the limit the join falls back to shuffling ONLY the rank
-        # side (Ew stays partitioned by the join key src)
-        contrib = (
-            Ew.join(bc(rank.select("id", "rank"), n).withColumnRenamed("id", "src"), "src")
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") * F.col("w")).alias("c"))
-            .select(F.col("dst").alias("id"), "c")
-        )
-        new_rank = (
-            verts.join(bc(contrib, n), "id", "left")
-            .crossJoin(F.broadcast(dm))
-            .select(
-                "id",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
-                    * (F.coalesce(F.col("c"), F.lit(0.0)) + F.col("dm") / F.lit(float(n)))
-                ).alias("rank"),
-                "dang",
-            )
-        )
-        new_rank, _ = runner.tick("rank_next", new_rank, count=(fixed_iters is None))
-        if fixed_iters is None:
-            delta = (
-                new_rank.select("id", "rank")
-                .join(rank.select("id", F.col("rank").alias("prev")), "id")
-                .agg(F.max(F.abs(F.col("rank") - F.col("prev"))))
-                .first()[0]
-            )
-            runner.log("pagerank_iter", delta=float(delta))
-            runner.promote("rank_next", "rank")
-            rank = new_rank
-            if delta < tol:
-                break
-        else:
-            runner.promote("rank_next", "rank")
-            rank = new_rank
-        runner.maybe_checkpoint({"rank": rank})
-    result = rank.select("id", "rank")
-    for s in ("verts", "edges"):
-        runner.release(s)
-    return result
+    if fixed_iters is not None:
+        return _iterate(runner, Ew, vp, n, teleport, fixed_iters)
+    return _iterate(runner, Ew, vp, n, teleport, max_iters, tol)
 
 
 def personalized_pagerank(
@@ -131,12 +165,9 @@ def personalized_pagerank(
     to the source set, so Σ rank = 1 every step and mass never leaks to
     vertices unreachable from S. Fixed-depth deterministic recurrence —
     the DuckDB oracle unrolls it (PPR_SQL in __spark_entry__) mirroring
-    this expression order, like the global-pagerank oracle.
-
-    Scale notes: identical plan shape to `pagerank` — the per-iteration
-    shuffle is the contrib groupBy(dst); p rides as a column of the
-    vertex frame (no extra shuffle); the dangling sum is a scalar agg
-    folded into the same job via a broadcast 1-row cross join.
+    this expression order, like the global-pagerank oracle. Runs the
+    same loop, so the same plan, as `pagerank`; p rides as a column of
+    the vertex frame.
     """
     runner = runner or SuperstepRunner(spark, run_id="ppr")
     E = canonical_edges(edges)
@@ -149,60 +180,20 @@ def personalized_pagerank(
         .distinct()
         .join(verts, "id", "left_semi")
     )
-    n_src = S.count()
+    S, n_src = runner.tick("sources", S, detach=False)
     if n_src == 0:
+        runner.release("sources")
         raise ValueError("personalized_pagerank: no sources present in the graph")
-    outdeg = E.groupBy("src").count().select(F.col("src").alias("id"), F.col("count").alias("od"))
-    # p(v) and the dangling marker folded into the vertex frame once
-    # (the pagerank() round-7 fold: the per-iteration dangling-mass sum
-    # becomes a filter over the rank state instead of a join)
+    Ew, has_out = out_degree_fold(E)
     vp = (
         verts.join(S.withColumn("in_s", F.lit(1)), "id", "left")
-        .join(outdeg.select("id", F.lit(True).alias("has_out")), "id", "left")
-        .select(
-            "id",
-            (F.coalesce(F.col("in_s"), F.lit(0)) / F.lit(float(n_src))).alias("p"),
-            F.coalesce(~F.col("has_out"), F.lit(True)).alias("dang"),
-        )
+        .join(has_out, "id", "left")
+        .select("id", (F.coalesce(F.col("in_s"), F.lit(0)) / F.lit(float(n_src))).alias("p"), _dangling())
     )
-    vp, n_v = runner.tick("verts", vp, detach=False)
+    vp, n = runner.tick("verts", vp, detach=False)
+    runner.release("sources")
 
-    Ew = E.join(outdeg, E["src"] == outdeg["id"]).select("src", "dst", (F.lit(1.0) / F.col("od")).alias("w"))
-    Ew = runner.keyed_edges("edges", Ew, "dst", "src", n_v)
+    def teleport(c, dm):
+        return F.lit(1.0 - damping) * F.col("p") + F.lit(damping) * (c + dm * F.col("p"))
 
-    rank = vp.select("id", F.col("p").alias("rank"), "dang")
-    rank, _ = runner.tick("rank", rank)
-
-    for i in range(fixed_iters):
-        runner.superstep = i + 1
-        runner.bump("iterations")
-        dm = (
-            rank.where(F.col("dang"))
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm"))
-        )
-        contrib = (
-            Ew.join(bc(rank.select("id", "rank"), n_v).withColumnRenamed("id", "src"), "src")
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") * F.col("w")).alias("c"))
-            .select(F.col("dst").alias("id"), "c")
-        )
-        new_rank = (
-            vp.join(bc(contrib, n_v), "id", "left")
-            .crossJoin(F.broadcast(dm))
-            .select(
-                "id",
-                (
-                    F.lit(1.0 - damping) * F.col("p")
-                    + F.lit(damping)
-                    * (F.coalesce(F.col("c"), F.lit(0.0)) + F.col("dm") * F.col("p"))
-                ).alias("rank"),
-                "dang",
-            )
-        )
-        new_rank, _ = runner.tick("rank_next", new_rank, count=False)
-        runner.promote("rank_next", "rank")
-        rank = new_rank
-    result = rank.select("id", "rank")
-    for s in ("verts", "edges"):
-        runner.release(s)
-    return result
+    return _iterate(runner, Ew, vp, n, teleport, fixed_iters)

@@ -539,8 +539,7 @@ def _trim2(runner, re, re_cnt, active, a_cnt, done):
     ).distinct()
     retired, r_cnt = runner.tick("t2retired", retired)
     done.add(retired)
-    active, a_cnt = runner.tick("active_next", active.join(bc(retired, r_cnt).select("id"), "id", "left_anti"))
-    runner.promote("active_next", "active")
+    active, a_cnt = runner.tick("active", active.join(bc(retired, r_cnt).select("id"), "id", "left_anti"))
     re, re_cnt = runner.tick("re", endpoint_join(re, bc(retired, r_cnt), "left_anti"), detach=False)
     runner.log("trim2", retired=r_cnt, active=a_cnt)
     runner.release("t2pairs")
@@ -567,9 +566,8 @@ def _decompose(runner, re, active, a_cnt, iters):
             break
         prev_sum = new_sum
     active, a_cnt = runner.tick(
-        "active_next", active.join(bc(lab, a_cnt), "id").select("id", F.col("label").alias("range"))
+        "active", active.join(bc(lab, a_cnt), "id").select("id", F.col("label").alias("range"))
     )
-    runner.promote("active_next", "active")
     runner.release("dec_edges")
     runner.release("dec_lab")
     return active, a_cnt

@@ -82,8 +82,7 @@ def ktruss(
         runner.superstep = i + 1
         runner.bump("iterations")
         survivors = _support(resid).where(F.col("support") >= thresh).select("a", "b")
-        survivors, n_next = runner.tick("resid_next", survivors)
-        runner.promote("resid_next", "resid")
+        survivors, n_next = runner.tick("resid", survivors)
         converged = n_next == n_edges
         resid, n_edges = survivors, n_next
         if rounds is None and converged:

@@ -91,7 +91,6 @@ class SuperstepRunner:
         checkpoint_dir: str | None = None,
         run_id: str = "run0",
         checkpoint_interval: int = 8,
-        collect_lineage: bool = True,
         fingerprint: str | None = None,
         state_format: str | None = None,
     ):
@@ -109,7 +108,6 @@ class SuperstepRunner:
         # can never silently return the stale run's state
         self.fingerprint = fingerprint
         self.checkpoint_interval = max(1, checkpoint_interval)
-        self.collect_lineage = collect_lineage
         self.superstep = 0
         import threading
 
@@ -294,8 +292,6 @@ class SuperstepRunner:
     # ---- durable checkpoint / resume ----------------------------------
 
     def _lineage(self, df: DataFrame) -> list[dict]:
-        if not self.collect_lineage:
-            return []
         rows = (
             df.withColumn("__pid", F.spark_partition_id())
             .groupBy("__pid")

@@ -51,12 +51,11 @@ def test_scc_driver_action_budget(spark):
 
 def test_hits_driver_action_budget(spark):
     """hits() submits a LINEAR number of jobs in the iteration count:
-    measured exactly 10/iteration + 16 constant (iters 1..4 -> 26/36/46/56,
-    the same in each of three trials). The budget (51 for iters=3, the
-    largest that a +6 regression still exceeds) catches the two
-    regressions that matter at cluster scale: a new eager action per
-    half-step (+6) and, worse, any superlinear growth from un-truncated
-    lineage re-evaluation."""
+    measured exactly 8/iteration + 16 constant (iters 1..4 -> 24/32/40/48,
+    the same in each of two trials, the result's count included). The
+    budget (51 for iters=3, set when the count was 46) catches a new
+    eager action of two or more jobs per half-step (+12) and, worse, any
+    superlinear growth from un-truncated lineage re-evaluation."""
     from detectingscc_spark.operators.hits import hits
 
     path = os.path.join(FIXTURE_DATA, "sample1.gr")
@@ -73,6 +72,30 @@ def test_hits_driver_action_budget(spark):
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert jobs <= 51, (
         f"hits(iters=3) submitted {jobs} Spark jobs (budget 51, measured "
-        "46 = 10/iter + 16): an eager action crept into the "
+        "40 = 8/iter + 16): an eager action crept into the "
         "per-half-step path or lineage re-evaluation went superlinear"
+    )
+
+
+def test_dag_layers_driver_action_budget(spark):
+    """dag_layers' convergence probe (the layer sum) rides as an observed
+    metric of each round's `layers` tick: measured 82 jobs on a 10-edge
+    chain, which needs 11 rounds. A separate sum action per round costs
+    2 jobs more per round (104 before the probe moved into the tick), so
+    the budget of 90 catches it."""
+    from detectingscc_spark.operators.condensation import dag_layers
+
+    chain = spark.createDataFrame([(i, i + 1) for i in range(10)], "src long, dst long")
+    sc = spark.sparkContext
+    group = "action-budget-daglayers"
+    sc.setJobGroup(group, "driver-action budget guard")
+    try:
+        layers = {r["id"]: r["layer"] for r in dag_layers(spark, chain).collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert layers == {i: i for i in range(11)}
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= 90, (
+        f"dag_layers on a 10-edge chain submitted {jobs} Spark jobs (budget 90, "
+        "measured 82): a per-round action crept in beside the layers tick"
     )
