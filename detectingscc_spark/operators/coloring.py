@@ -35,6 +35,9 @@ scale):
     pull-max. Two jumps per tick triple path-shortening per round; any
     trajectory reaches the same unique fixpoint (max forward-reachable
     id), detected by the monotone color-sum observation;
+  * the edge copies of the propagation (`prop_re`) and of the class BFS
+    (`ce`) persist through `SuperstepRunner.keyed_edges`, so while the
+    color frame broadcasts each tick's aggregation is exchange-free;
   * the class-confined BFS is `operators/bfs.py::reach`, whose visited
     set is a compacting `Fragments` set (plans/superstep.py): one tick
     per hop instead of re-materializing the whole visited set every hop;
@@ -51,10 +54,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..graph import canonical_edges, vertex_universe
-from ..plans.superstep import Fragments, SuperstepRunner, bc, broadcastable, part_target
+from ..plans.superstep import Fragments, SuperstepRunner, bc
 from .bfs import reach
 from .components import label_step
-from .scc import endpoint_join, trim1_fixpoint
+from .scc import COLOR_MAX_ITERS, endpoint_join, trim1_fixpoint
 
 
 def scc_coloring(
@@ -64,7 +67,6 @@ def scc_coloring(
     *,
     runner: SuperstepRunner | None = None,
     max_rounds: int = 64,
-    max_prop_iters: int = 200,
     max_bfs_hops: int = 10_000,
 ) -> DataFrame:
     runner = runner or SuperstepRunner(spark, run_id="scc_coloring")
@@ -97,40 +99,22 @@ def scc_coloring(
         # ---- max-color propagation with pointer jumping ---------------
         # color(v) = max id forward-reachable: one pull-max `label_step`
         # per tick. Monotone increasing; sum fixpoint = converged.
-        # While the color frame is broadcast-able every pull join is
-        # broadcast-hash, so a PERSISTED copy of the residual partitioned
-        # by the pull's AGG key (src) makes each propagation tick's
-        # aggregation exchange-free (persist, unlike localCheckpoint,
-        # preserves partitioning and the broadcast join carries it
-        # through). Past the broadcast regime the pull is a shuffle join
-        # on dst and the re frame is used as-is.
-        if broadcastable(a_cnt):
-            prop_re, _ = runner.tick(
-                "prop_re",
-                re.repartition(part_target(re_cnt), "src"),
-                truncate=False, count=False, detach=False,
-            )
-        else:
-            prop_re = re
-
+        prop_re = runner.keyed_edges("prop_re", re, "src", "dst", a_cnt, rows=re_cnt)
         col_df, _ = runner.tick("color", active.select("id", F.col("id").alias("label")))
         prev = None
-        converged = False
-        for it in range(max_prop_iters):
+        for prop_iters in range(1, COLOR_MAX_ITERS + 1):
             runner.bump("FWD_iterations")
             col_df, cur_sum = label_step(runner, "color", prop_re, col_df, a_cnt, "max")
             if cur_sum == prev:
-                converged = True
-                prev_iters = it + 1
                 break
             prev = cur_sum
-        if not converged:
+        else:
             # stale colors would let the class-confined BFS split an SCC
             # silently; fail loudly like the FB engine's max_rounds guard
             raise RuntimeError(
-                f"color propagation did not converge in {max_prop_iters} iterations"
+                f"color propagation did not converge in {COLOR_MAX_ITERS} iterations"
             )
-        runner.log("color_prop_done", iters=prev_iters)
+        runner.log("color_prop_done", iters=prop_iters)
 
         # ---- forward BFS from roots within color class -> SCCs --------
         ce = (
@@ -139,12 +123,7 @@ def scc_coloring(
             .where(F.col("sc") == F.col("dc"))
             .select("src", "dst")
         )
-        # persisted + partitioned by the hop dedup key (dst): while the
-        # frontier broadcasts, each BFS hop's distinct is exchange-free
-        ce, _ = runner.tick(
-            "ce", ce.repartition(part_target(re_cnt), "dst"),
-            truncate=False, count=False, detach=False,
-        )
+        ce = runner.keyed_edges("ce", ce, "dst", "src", a_cnt, rows=re_cnt)
         vis, hops, left = reach(
             runner, "vis", ce, col_df.where(F.col("label") == F.col("id")).select("id"), max_bfs_hops
         )
@@ -157,7 +136,7 @@ def scc_coloring(
         reps = retired.groupBy("label").agg(F.min("id").alias("scc_id"))
         done.add(retired.join(bc(reps, a_cnt), "label").select("id", "scc_id"))
         active, a_cnt = runner.tick("active", active.join(bc(vis.view, vis.count), "id", "left_anti"))
-        runner.log("coloring_round", round=rnd, active=a_cnt, prop_iters=prev_iters, bfs_hops=hops)
+        runner.log("coloring_round", round=rnd, active=a_cnt, prop_iters=prop_iters, bfs_hops=hops)
         vis.release()
         for s in ("color", "ce", "prop_re"):
             runner.release(s)

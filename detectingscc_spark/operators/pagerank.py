@@ -22,7 +22,7 @@ runner's tick.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..graph import canonical_edges, vertex_universe
@@ -93,20 +93,19 @@ def _iterate(runner, Ew, vp, n, teleport, iters, tol=None) -> DataFrame:
             .crossJoin(F.broadcast(dm))
             .select("id", teleport(F.coalesce(F.col("s"), F.lit(0.0)), F.col("dm")).alias("rank"), "dang")
         )
-        if tol is None:
-            rank, _ = runner.tick("rank", nxt, count=False)
-        else:
-            # the delta reads the old rank, so it stays live until promoted
-            nxt, _ = runner.tick("rank_next", nxt, count=False)
-            delta = (
-                nxt.select("id", "rank")
-                .join(rank.select("id", F.col("rank").alias("prev")), "id")
-                .agg(F.max(F.abs(F.col("rank") - F.col("prev"))))
-                .first()[0]
+        if tol is not None:
+            # the largest rank move rides the tick as an observed metric:
+            # the old rank joins the new one's plan
+            obs = Observation()
+            nxt = (
+                nxt.join(bc(rank.select("id", F.col("rank").alias("prev")), n), "id")
+                .observe(obs, F.max(F.abs(F.col("rank") - F.col("prev"))).alias("delta"))
+                .drop("prev")
             )
+        rank, _ = runner.tick("rank", nxt, count=False)
+        if tol is not None:
+            delta = obs.get["delta"]
             runner.log("pagerank_iter", delta=float(delta))
-            runner.promote("rank_next", "rank")
-            rank = nxt
             if delta < tol:
                 break
         runner.maybe_checkpoint({"rank": rank})

@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..graph import canonical_edges, vertex_universe
+from ..plans.superstep import SuperstepRunner
 from .scc import small_groups, strongly_connected_components, tarjan_groups
 
 
@@ -70,6 +71,8 @@ def scc_partitioned(
     if partitions is None:
         return strongly_connected_components(spark, edges, vertices, **scc_kwargs)
 
+    # both phases tick on the global engine's runner: every job is tagged
+    runner = scc_kwargs["runner"] = scc_kwargs.get("runner") or SuperstepRunner(spark, scc_kwargs.get("checkpoint_dir"))
     E = canonical_edges(edges)
     vp = vertex_universe(E, vertices).join(
         partitions.select(F.col("id").cast("long"), F.col("part").cast("long")), "id", "left"
@@ -87,9 +90,9 @@ def scc_partitioned(
     local = (
         tarjan_groups(local_edges, vp, small, "part").select("id", F.col("scc_id").alias("lbl"))
         .unionByName(vp.join(small, "part", "left_anti").select("id", F.col("id").alias("lbl")))
-        .persist()
     )
-    local.count()
+    # the lazy result reads `local`, so its slot stays live
+    local, _ = runner.tick("local", local, count=False, detach=False)
 
     # ---- phase 2: contract local SCCs, run the global engine ----------
     lu = local.select(F.col("id").alias("src"), F.col("lbl").alias("lsrc"))
@@ -104,9 +107,10 @@ def scc_partitioned(
     # its edge input several times (canonicalize, vertex derivation,
     # round-1 residual) and would otherwise re-run the two label joins
     # + distinct per read
-    condensed = condensed.localCheckpoint(eager=True)
+    condensed, _ = runner.tick("condensed", condensed, count=False, detach=False)
     cond_verts = local.select(F.col("lbl").alias("id")).distinct()
     global_scc = strongly_connected_components(spark, condensed, cond_verts, **scc_kwargs)
+    runner.release("condensed")
 
     # ---- map back -----------------------------------------------------
     return local.join(global_scc.withColumnRenamed("id", "lbl"), "lbl").select("id", "scc_id")

@@ -42,8 +42,8 @@ Superstep fixed-cost discipline (the scaling-efficiency levers):
     `bfs_distances` and the landmark BFS.
   * Frontier joins and visited anti-joins broadcast while the driver-
     known row count is under BROADCAST_ROW_LIMIT (plans/superstep.py);
-    past it they are plain shuffle joins, and AQE skew-join splitting
-    spreads hub adjacency.
+    past it they are shuffle joins. The BFS edges persist through
+    `SuperstepRunner.keyed_edges`, keyed for whichever regime runs.
   * Visited and retired vertices accumulate as materialized fragments
     of a `Fragments` set (plans/superstep.py); the `done` set is their
     lazy union (no O(done) rewrite per emit).
@@ -60,7 +60,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..graph import canonical_edges, vertex_universe
-from ..plans.superstep import Fragments, SuperstepRunner, bc, broadcastable, part_target
+from ..plans.superstep import Fragments, SuperstepRunner, bc
 from .bfs import reach
 from .components import label_step
 
@@ -75,6 +75,11 @@ from .components import label_step
 # crossover may sit below the caps; it is unmeasured.
 FINISH_MAX_EDGES = 5_000_000
 FINISH_MAX_VERTS = 5_000_000
+# Decomposition runs in rounds 2, 2 + DECOMPOSE_EVERY, ... for at most
+# DECOMPOSE_ITERS label steps; coloring's propagation gets COLOR_MAX_ITERS.
+DECOMPOSE_EVERY = 4
+DECOMPOSE_ITERS = 12
+COLOR_MAX_ITERS = 200
 
 
 def _tarjan_local(edge_rows, vertex_ids):
@@ -179,8 +184,6 @@ def strongly_connected_components(
     max_rounds: int = 64,
     max_bfs_hops: int = 10_000,
     local_finish_edges: int | None = None,
-    decompose_every: int = 4,
-    decompose_iters: int = 12,
     trim2_enabled: bool = True,
     trim_iters: int = 4,
 ) -> DataFrame:
@@ -250,8 +253,8 @@ def strongly_connected_components(
         # ---- optional range decomposition (weak components of residual)
         # (after refresh: must only see same-CURRENT-range edges, else it
         # would partially undo the previous round's FB split)
-        if rnd > 1 and decompose_every and (rnd - 2) % decompose_every == 0:
-            active, a_cnt = _decompose(runner, re, active, a_cnt, decompose_iters)
+        if rnd > 1 and (rnd - 2) % DECOMPOSE_EVERY == 0:
+            active, a_cnt = _decompose(runner, re, active, a_cnt)
             runner.log("decompose", active=a_cnt)
             re, re_cnt = refresh_residual(re, active, a_cnt)
         runner.log("residual", active=a_cnt, edges=re_cnt)
@@ -413,33 +416,16 @@ def _bfs_join(runner, re_f, re_cnt, state, max_bfs_hops, n_active):
     both directions advance in ONE join per hop, and each hop is one
     materialized level — the next frontier.
 
-    While the frontier is broadcast-able the join is a map-side hash join
-    and hubs are irrelevant. Past BROADCAST_ROW_LIMIT the hop is a plain
-    shuffle join, and AQE skew-join splitting spreads a hub's adjacency
-    over several tasks (the Spark analog of the reference dispatching
-    warp/CTA kernels for high-degree vertices,
-    /root/reference/include/scc_kernels.h:46-105)."""
+    While the active set is broadcast-able the hop is a map-side hash
+    join, and `keyed_edges` keys the edges by the hop's dedup key (dir,
+    dst), so the per-hop distinct is exchange-free. Past
+    BROADCAST_ROW_LIMIT the hop is a shuffle join on (dir, src), the key
+    the edges then carry, so only the frontier is shuffled (and AQE
+    cannot split a hub's adjacency: it needs both sides shuffled)."""
     ed = re_f.select(F.lit(0).alias("dir"), "src", "dst").unionByName(
         re_f.select(F.lit(1).alias("dir"), F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    # While the frontier stays broadcast-able (bounded by the active
-    # count), every hop's joins are broadcast-hash and the only exchange
-    # left is the frontier dedup — so partition the cached edge frame by
-    # the DEDUP key (dir, dst): persist (unlike localCheckpoint) preserves
-    # the partitioning, the broadcast join and the select carry it
-    # through, and the per-hop distinct becomes exchange-free. Past the
-    # broadcast regime the hops are shuffle joins on (dir, src) and key
-    # partitioning buys nothing — keep the byte-sized coalesce so per-hop
-    # scans cost O(data) tasks.
-    n_parts_ed = part_target(2 * re_cnt if re_cnt else None)
-    if broadcastable(n_active):
-        ed = ed.repartition(n_parts_ed, "dir", "dst")
-    else:
-        ed = ed.coalesce(n_parts_ed)
-    ed, _ = runner.tick(
-        "bfs_ed", ed,
-        truncate=False, count=False, detach=False,
-    )
+    ed = runner.keyed_edges("bfs_ed", ed, ["dir", "dst"], ["dir", "src"], n_active, rows=2 * re_cnt)
 
     seeds = state.where("fw").select(F.lit(0).alias("dir"), "id").unionByName(
         state.where("bw").select(F.lit(1).alias("dir"), "id")
@@ -547,7 +533,7 @@ def _trim2(runner, re, re_cnt, active, a_cnt, done):
     return active, a_cnt, re, re_cnt, True
 
 
-def _decompose(runner, re, active, a_cnt, iters):
+def _decompose(runner, re, active, a_cnt):
     """Refine ranges to weak components of the residual graph via
     hash-min label propagation + pointer jumping (reference's 'WCC
     decomposition', /root/reference/src/scc_WCC.cu:829-840 /
@@ -560,7 +546,7 @@ def _decompose(runner, re, active, a_cnt, iters):
     und = runner.keyed_edges("dec_edges", und, "src", "dst", a_cnt)
     lab, _ = runner.tick("dec_lab", active.select("id", F.col("id").alias("label")))
     prev_sum = None  # labels are monotone non-increasing; sum fixpoint = converged
-    for _ in range(iters):
+    for _ in range(DECOMPOSE_ITERS):
         lab, new_sum = label_step(runner, "dec_lab", und, lab, a_cnt, "min")
         if new_sum == prev_sum:
             break

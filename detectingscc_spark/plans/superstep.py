@@ -63,14 +63,12 @@ def bc(df: DataFrame, cnt: int | None) -> DataFrame:
     return F.broadcast(df) if broadcastable(cnt) else df
 
 
-def part_target(rows: int | None) -> int:
+def part_target(rows: int) -> int:
     """Partition count sized by DATA VOLUME (~16MB of 24-byte rows each),
-    capped at the session's shuffle parallelism — cached iterative state
+    capped at the session's shuffle parallelism — a cached edge frame
     should never carry core-count partitions when the bytes don't warrant
     them (the tiny-task flood is pure scheduler overhead at any cluster
-    size)."""
-    if rows is None:
-        return 1
+    size). `SuperstepRunner.keyed_edges` sizes by it."""
     spark = SparkSession.getActiveSession()
     cap = int(spark.conf.get("spark.sql.shuffle.partitions", "32")) if spark else 32
     return max(1, min(cap, (rows * 24) // (16 << 20) + 1))
@@ -138,7 +136,9 @@ class SuperstepRunner:
         """Persist `df` as the new value of slot `name`, optionally count
         it, release the previous value, and truncate lineage. Returns
         (materialized df, row count | None). Pass count=False when the
-        count is not needed for control flow — saves one job per tick.
+        count is not needed for control flow. truncate=False is
+        `keyed_edges`' persist, which keeps the frame's partitioning and
+        is never counted.
 
         detach=True (default) rebuilds the frame via a Row-RDD round trip
         to RESET carried statistics (see _detach) — required for frames
@@ -148,28 +148,21 @@ class SuperstepRunner:
         large edge/visited frames whose statistics only compound
         additively (semi/anti joins and unions keep sizeInBytes linear in
         the superstep count)."""
+        cnt = None
         with self._phase(re.sub(r"_\d+$", "", name)):
-            if truncate:
+            if not truncate:
+                # materialize the cache without a count job
+                new = df.persist(StorageLevel.MEMORY_AND_DISK)
+                new.write.format("noop").mode("overwrite").save()
+            elif count:
                 # eager localCheckpoint both materializes and cuts the plan;
                 # the row count rides along as an observed metric of the SAME
                 # job — one driver action per tick, not two
-                if count:
-                    obs = Observation()
-                    new = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
-                        eager=True
-                    )
-                    cnt = int(obs.get["n"])
-                else:
-                    new = df.localCheckpoint(eager=True)
-                    cnt = None
+                obs = Observation()
+                new = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+                cnt = int(obs.get["n"])
             else:
-                new = df.persist(StorageLevel.MEMORY_AND_DISK)
-                if count:
-                    cnt = new.count()
-                else:
-                    # materialize the cache without a count job
-                    cnt = None
-                    new.write.format("noop").mode("overwrite").save()
+                new = df.localCheckpoint(eager=True)
         with self._lock:
             old = self._live.get(name)
             self._live[name] = new
@@ -197,22 +190,31 @@ class SuperstepRunner:
                 sc.removeJobTag(tag)
 
     def keyed_edges(
-        self, slot: str, df: DataFrame, agg_key: str, join_key: str, n_state: int
+        self, slot: str, df: DataFrame, agg_key, join_key, n_state: int, rows: int | None = None
     ) -> DataFrame:
         """Persist a loop-invariant edge frame as slot `slot`, hash-keyed
-        for the supersteps that read it.
+        for the supersteps that read it: the one place an operator keys
+        or sizes a cached edge frame.
 
         Each superstep joins the edges with a state frame of `n_state`
-        rows on `join_key` and aggregates the result by `agg_key`.
-        `persist` keeps the hash partitioning of the frame it caches and
+        rows on `join_key` and aggregates (or deduplicates) the result by
+        `agg_key`; a key is a column name or a list of them. `persist`
+        keeps the hash partitioning of the frame it caches and
         `localCheckpoint` drops it, so the key chosen here survives every
         iteration. In the broadcast regime the state side is broadcast and
         the join carries the edge partitioning through, so edges keyed by
-        the aggregation key make the aggregation exchange-free. Past the
-        limit the join is a shuffle join, and edges keyed by the join key
-        are not reshuffled every iteration."""
-        key = agg_key if broadcastable(n_state) else join_key
-        out, _ = self.tick(slot, df.repartition(key), truncate=False, count=False, detach=False)
+        the aggregation key make the aggregation exchange-free; `rows`,
+        the edge count if the caller knows it, sizes them (`part_target`).
+        Past the limit the join is a shuffle join, and edges keyed by the
+        join key are not reshuffled every iteration."""
+        under = broadcastable(n_state)
+        key = agg_key if under else join_key
+        cols = [key] if isinstance(key, str) else key
+        if under and rows is not None:
+            df = df.repartition(part_target(rows), *cols)
+        else:
+            df = df.repartition(*cols)
+        out, _ = self.tick(slot, df, truncate=False, count=False, detach=False)
         return out
 
     def _detach(self, df: DataFrame) -> DataFrame:

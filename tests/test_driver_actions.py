@@ -53,9 +53,9 @@ def test_hits_driver_action_budget(spark):
     """hits() submits a LINEAR number of jobs in the iteration count:
     measured exactly 8/iteration + 16 constant (iters 1..4 -> 24/32/40/48,
     the same in each of two trials, the result's count included). The
-    budget (51 for iters=3, set when the count was 46) catches a new
-    eager action of two or more jobs per half-step (+12) and, worse, any
-    superlinear growth from un-truncated lineage re-evaluation."""
+    budget (45 for iters=3) catches a new one-job eager action per
+    half-step (+6, to 46) and, worse, any superlinear growth from
+    un-truncated lineage re-evaluation."""
     from detectingscc_spark.operators.hits import hits
 
     path = os.path.join(FIXTURE_DATA, "sample1.gr")
@@ -70,8 +70,8 @@ def test_hits_driver_action_budget(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert n == v
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert jobs <= 51, (
-        f"hits(iters=3) submitted {jobs} Spark jobs (budget 51, measured "
+    assert jobs <= 45, (
+        f"hits(iters=3) submitted {jobs} Spark jobs (budget 45, measured "
         "40 = 8/iter + 16): an eager action crept into the "
         "per-half-step path or lineage re-evaluation went superlinear"
     )

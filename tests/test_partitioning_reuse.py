@@ -6,9 +6,11 @@ regime) so every superstep's aggregation plans as a partial+final
 HashAggregate pair with NO shuffle Exchange: this works because
 `persist()` preserves a frame's physical partitioning through
 `tick(truncate=False)` while `localCheckpoint()` does not.
-WCC/LPA/PageRank/HITS/SALSA/eigencentrality and the FB engine's
-decomposition use `keyed_edges`; coloring and scc-BFS key their own
-byte-sized copies (OPTIMIZATION_r07.md).
+Every persisted edge frame goes through `keyed_edges`: WCC, LPA,
+PageRank, HITS/SALSA/eigencentrality, the FB engine's decomposition and
+BFS edges (keyed by (dir, dst) / (dir, src)), and coloring's propagation
+and class-BFS copies (the SCC callers also size theirs by edge count,
+OPTIMIZATION_r07.md).
 If a Spark upgrade ever stops propagating partitioning through
 persist + broadcast join + projection, these assertions flag it before
 the bench does.
@@ -89,8 +91,9 @@ def test_localcheckpoint_does_not_preserve_partitioning(spark):
 
 def test_keyed_edges_picks_the_key_by_regime(spark):
     """Under the broadcast limit the edges are keyed by the aggregation
-    key (the per-superstep aggregation needs no exchange); past it they
-    are keyed by the join key."""
+    key (the per-superstep aggregation needs no exchange) and, given
+    `rows`, sized by `part_target`; past it they are keyed by the join
+    key. Keys may span columns."""
     from detectingscc_spark.plans import superstep
     from detectingscc_spark.plans.superstep import SuperstepRunner
 
@@ -111,4 +114,25 @@ def test_keyed_edges_picks_the_key_by_regime(spark):
     assert _n_shuffle_exchanges_outside_cache(ke.groupBy("dst").count()) >= 1
     # the result sanity of the keyed frame: same rows as its input
     assert ke.count() == e.count()
+
+    # the FB BFS edges: keyed by (dir, dst), the hop's dedup key, and sized
+    # by the caller's row count under the limit; by (dir, src), the hop's
+    # join key, past it
+    ed = spark.range(50_000).select(
+        (F.col("id") % 2).alias("dir"), (F.col("id") % 997).alias("src"), ((F.col("id") * 7) % 997).alias("dst")
+    )
+    front = spark.range(0, 997, 3).select(F.lit(0).cast("long").alias("dir"), F.col("id").alias("src"))
+    rows = 1_500_000
+    parts = superstep.part_target(rows)
+    assert 1 < parts < int(spark.conf.get("spark.sql.shuffle.partitions"))
+    ke = runner.keyed_edges("bfs_ed", ed, ["dir", "dst"], ["dir", "src"], 997, rows=rows)
+    assert ke.rdd.getNumPartitions() == parts
+    hop = ke.join(superstep.bc(front, 333), ["dir", "src"]).select("dir", F.col("dst").alias("id")).distinct()
+    assert _n_shuffle_exchanges_outside_cache(hop) == 0
+    assert _n_shuffle_exchanges_outside_cache(ke.groupBy("dir", "src").count()) >= 1
+
+    ke = runner.keyed_edges("bfs_ed", ed, ["dir", "dst"], ["dir", "src"], past, rows=rows)
+    assert _n_shuffle_exchanges_outside_cache(ke.groupBy("dir", "src").count()) == 0
+    assert _n_shuffle_exchanges_outside_cache(ke.groupBy("dir", "dst").count()) >= 1
+    assert ke.count() == ed.count()
     runner.release_all()

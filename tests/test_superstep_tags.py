@@ -63,6 +63,7 @@ def test_checkpoint_tags_its_jobs(spark, caller_tag, tmp_path):
 # operator call on (spark, edges, verts), its run_id, its slot stems
 LINK_OPERATORS = {
     "pagerank": (lambda s, e, v: pagerank(s, e, v, fixed_iters=3), "pagerank", ("verts", "edges", "rank")),
+    "pagerank_tol": (lambda s, e, v: pagerank(s, e, v, max_iters=3), "pagerank", ("verts", "edges", "rank")),
     "personalized_pagerank": (
         lambda s, e, v: personalized_pagerank(s, e, s.range(1, 4), fixed_iters=3),
         "ppr",
